@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan inspection harness: prints the formatted physical plan of
@@ -11,12 +10,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench/verify session, so the audit sees the engine they run
+    val spark = Sessions.local("4")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.registry
       .filter(q => names.isEmpty || names.contains(q.name))

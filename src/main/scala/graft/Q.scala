@@ -8,8 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the driver's compare sorts columns BY NAME before hashing.
   *
   * Oracle-parity rules used throughout the inventory:
-  *  - money/ratio aggregations run in exact DECIMAL (order-independent,
-  *    bit-identical across engines), cast to DOUBLE only at the end;
+  *  - money/ratio aggregations sum exactly (order-independent,
+  *    bit-identical across engines), cast to DOUBLE only at the end:
+  *    TPC-H money sums integer cents (`Relational.cents`) with `Sum128`,
+  *    a DECIMAL(38,0) result, against the oracle's HUGEINT
+  *    `SUM(BIGINT)`; event values sum as DECIMAL(12,2) on both sides;
   *  - divisions happen in IEEE double on exact inputs (deterministic);
   *  - timestamps are compared at epoch-millisecond precision (events.ts
   *    is ns in parquet; Spark reads the full ns value via nanosAsLong,

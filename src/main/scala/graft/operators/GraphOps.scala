@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.util.chaining._
 
 /** Graph-shaped query capabilities of the reference's dataflow engine,
   * re-expressed on DataFrames (SURVEY §2.10): reachability
@@ -10,91 +9,78 @@ import scala.util.chaining._
   * detection (`edge.py:506-540`), convergence-node search
   * (`executor.py:1819-1852`) and graph validation (`edge.py:574-698`).
   *
-  * Edges are a DataFrame with `src`/`dst` string columns; nodes a
-  * DataFrame with an `id` column. The BFS is a driver-side loop of
-  * DataFrame joins — iterations are bounded by graph *diameter* (not
-  * size), and each round pins its state for fan-out reuse (releasing
-  * pins two rounds back via [[Pin.Ledger]]; under the default lazy
-  * persist the plan keeps lineage, and rounds are diameter-bounded so
-  * plan depth stays small), so the same code runs on a 5-node routing
-  * graph or a billion-edge lineage graph (where each round is one
-  * distributed hash join).
+  * Edges are a DataFrame with `src`/`dst` columns; nodes a DataFrame
+  * with an `id` column. The two fixpoint drivers ([[reachable]],
+  * [[connectedComponents]]) share one size gate: an edge list of at
+  * most [[LocalMaxEdges]] rows is collected and solved in-process,
+  * zero jobs per round; a larger one runs a driver-side loop of
+  * DataFrame joins whose rounds are bounded by graph *diameter*, not
+  * size, each round checkpointed and probed by [[Pin.round]] — so the
+  * same code runs on a 5-node routing graph or a billion-edge lineage
+  * graph (where each round is one distributed hash join).
   */
 object GraphOps {
 
-  /** Min-depth BFS from `entry` nodes. Returns (node, depth). */
+  /** Raw edge rows at or under which [[reachable]] and
+    * [[connectedComponents]] run driver-local: 250k rows is tens of MB
+    * collected — far inside any driver heap, far outside any per-round
+    * job floor. */
+  private[graft] val LocalMaxEdges = 250000
+
+  /** Min-depth BFS from `entry` nodes. Returns (node, depth), node as
+    * a string whichever path runs. */
   def reachable(edges: DataFrame, entry: Seq[String],
-      maxIters: Int = 100): DataFrame = {
+      maxIters: Int = 100): DataFrame =
+    reachable(edges, entry, maxIters, LocalMaxEdges)
+
+  /** [[reachable]] with its size gate as a parameter (specs force the
+    * distributed loop with 0). ONE action collects at most
+    * `localMax + 1` edge rows; if they all fit, the BFS runs on the
+    * collected list in-process — e.g. the aggregated transition graph
+    * of an event stream: heavy distributed groupBy first, then an
+    * O(nodes) algorithm on the result. Otherwise each round is one
+    * frontier join + anti-join against the visited set. */
+  private[graft] def reachable(edges: DataFrame, entry: Seq[String],
+      maxIters: Int, localMax: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var frontier = entry.toDF("node").withColumn("depth", lit(0))
-    var visited = frontier
-    var depth = 0
-    var done = false
-    val pins = new Pin.Ledger
-    while (!done && depth < maxIters) {
-      depth += 1
-      val next = frontier
-        .join(edges, frontier("node") === edges("src"))
+    val e = edges.select(col("src").cast("string").as("src"),
+      col("dst").cast("string").as("dst"))
+    val head = e.limit(localMax + 1).as[(String, String)].collect()
+    if (head.length <= localMax) {
+      val adj = head.groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
+      val depth = scala.collection.mutable.Map[String, Int]()
+      entry.foreach(n => depth(n) = 0)
+      var frontier = entry.toSet
+      var d = 0
+      while (frontier.nonEmpty && d < maxIters) {
+        d += 1
+        frontier = frontier.flatMap(n => adj.getOrElse(n, Array.empty[String]))
+          .filterNot(depth.contains)
+        frontier.foreach(n => depth(n) = d)
+      }
+      return depth.toSeq.toDF("node", "depth")
+    }
+    var visited = entry.distinct.toDF("node").withColumn("depth", lit(0))
+    var prev: Option[DataFrame] = None
+    var pending = 1L
+    var d = 0
+    while (pending > 0 && d < maxIters) {
+      d += 1
+      val next = visited.filter(col("depth") === d - 1)
+        .join(e, col("node") === col("src"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("depth", lit(depth))
-        .pipe(pins.pin)
-      // count(), not isEmpty: under the default lazy-persist pin an
-      // isEmpty (take(1)) materializes only the partitions it
-      // touches, leaving the pin partially cached for the union
-      // consumer to finish — and escalates through 1-3 jobs on the
-      // empty terminal round. One count materializes the pin fully
-      // and answers emptiness in a single job.
-      // The explicit release is NOT redundant with the ledger: the
-      // ledger's rolling window only frees prev2 on advance(), and the
-      // loop exits right after this round — no later advance() ever
-      // reaches the terminal pin, so without this it would stay cached
-      // for the session's lifetime.
-      if (next.count() == 0L) { done = true; Pin.release(next) }
-      else {
-        visited = pins.pin(visited.union(next))
-        frontier = next
-      }
-      pins.advance()
+        .withColumn("depth", lit(d))
+      val (cp, n) = Pin.round(prev, visited.union(next),
+        col("depth") === d)
+      visited = cp; prev = Some(cp); pending = n
     }
     visited
   }
 
-  /** [[reachable]] for a graph already reduced to driver scale (e.g.
-    * the aggregated transition graph of an event stream: heavy
-    * distributed groupBy first, then an O(nodes) algorithm on the
-    * result). Collects the edge list and runs the BFS in-process —
-    * zero Spark jobs per iteration vs one join+checkpoint each for the
-    * distributed variant. */
-  def reachableLocal(edges: DataFrame, entry: Seq[String],
-      maxIters: Int = 100): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val adj = edges.select("src", "dst").as[(String, String)].collect()
-      .groupBy(_._1).map { case (s, a) => s -> a.map(_._2).toSeq }
-    val depth = scala.collection.mutable.Map[String, Int]()
-    entry.foreach(e => depth(e) = 0)
-    var frontier = entry.toSet
-    var d = 0
-    while (frontier.nonEmpty && d < maxIters) {
-      d += 1
-      frontier = frontier.flatMap(n => adj.getOrElse(n, Seq.empty))
-        .filterNot(depth.contains)
-      frontier.foreach(n => depth(n) = d)
-    }
-    depth.toSeq.toDF("node", "depth")
-  }
-
   // flood rounds before pointer jumping activates (see loop note)
   private val JumpAfter = 3
-
-  /** Symmetrized-edge-row ceiling under which [[connectedComponents]]
-    * runs driver-local (session conf; 500k rows ≈ 250k undirected
-    * edges ≈ tens of MB collected — far inside any driver heap, far
-    * outside any per-round job floor). */
-  private[graft] val LocalMaxEdgesKey = "spark.graft.cc.localMaxEdges"
-  private[graft] val LocalMaxEdgesDefault = 500000L
 
   /** Spark's min() over StringType orders by unsigned UTF-8 bytes
     * (UTF8String.compareTo), which differs from java.lang.String's
@@ -215,7 +201,13 @@ object GraphOps {
     * `edges` needs `src`/`dst` columns of one orderable type. Returns
     * `(id, component)` for every node incident to at least one edge,
     * `component` = min id in the node's component. */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame =
+    connectedComponents(edges, maxIters, LocalMaxEdges)
+
+  /** [[connectedComponents]] with its size gate as a parameter (specs
+    * force the distributed loop with 0). */
+  private[graft] def connectedComponents(edges: DataFrame, maxIters: Int,
+      localMax: Int): DataFrame = {
     // Pin the RAW edge list — in every registered consumer it is the
     // expensive part (an LSH/inverted-index candidate chain), and it
     // is what both paths below read. NOT released on return: like
@@ -242,34 +234,26 @@ object GraphOps {
     // the threshold (or for edge types whose driver ordering we
     // cannot prove equal to Spark's min()) the distributed loop below
     // runs unchanged — that is the 100 TB path.
-    val localMax = e.sparkSession.conf.getOption(LocalMaxEdgesKey)
-      .map(_.toLong).getOrElse(LocalMaxEdgesDefault)
-    // gate on 2·|e| to keep the conf's documented unit (symmetrized rows)
     val localResult: Option[DataFrame] =
-      if (2L * e.count() <= localMax) localComponents(e) else None
+      if (e.count() <= localMax) localComponents(e) else None
     if (localResult.isDefined) return localResult.get
     // symmetrize once: propagation must run both directions. Pinned
     // for the loop (read every round); fills cheaply off the e cache.
     val sym = Pin(e.union(e.select(col("dst"), col("src"))))
     // labels chain on THEMSELVES each round (labels ⋈ f(labels)), so
-    // unlike the BFS loops the logical plan doubles per round — lazy
-    // persist keeps lineage and the planner's tree goes exponential
-    // (measured: a diameter-11 path OOMs plan stringification alone).
-    // This is the unbounded-iterative-lineage case [[Pin]] reserves
-    // eager localCheckpoint for: truncate per round, and the round's
-    // convergence probe doubles as the checkpoint's materializer.
-    // lazy: round 1's materializing action computes it (both round-1
-    // consumers read through the checkpoint RDD's cache layer), so
-    // the init pays no job of its own
+    // the logical plan doubles per round — lazy persist keeps lineage
+    // and the planner's tree goes exponential (measured: a diameter-11
+    // path OOMs plan stringification alone). [[Pin.round]] truncates
+    // it per round. The initial labels checkpoint is lazy too: round
+    // 1's count computes it (both round-1 consumers read through the
+    // checkpoint RDD's cache layer), so the init pays no job of its own
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint(false)
     var converged = false
     var it = 0
-    val dbg = sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("true")
     while (!converged && it < maxIters) {
       it += 1
-      val tRound = System.nanoTime()
       // smallest label visible from each node's neighborhood this round
       val nbrMin = sym.join(labels, sym("src") === labels("id"))
         .groupBy(col("dst").as("id"))
@@ -301,28 +285,12 @@ object GraphOps {
                 .as("component"),
               col("old"))
         }
-      // LAZY checkpoint + one full-scan scalar as the materializing
-      // action: the convergence count must read every partition
-      // anyway, so it doubles as the checkpoint's materializer — the
-      // previous eager checkpoint ran its own job and the isEmpty
-      // probe added 1-3 more (take(1) escalates through partitions
-      // on the converged round, when nothing matches); one action
-      // per round replaces both (guide §1.2: fewer passes).
-      val next = jumped
+      // the convergence count is the round's only action (Pin.round)
+      val (next, improved) = Pin.round(Some(labels), jumped
         .withColumn("improved", col("component") < col("old"))
-        .drop("old")
-        .localCheckpoint(false)
-      converged = next.filter(col("improved")).count() == 0L
-      // next is fully materialized (lazy checkpoint, with the
-      // convergence count above as its sole materializing action), so
-      // the previous round's snapshot has no remaining consumer — free
-      // its executor blocks now instead of waiting for driver GC
-      // (deep graphs would otherwise hold one O(|nodes|) generation
-      // per round)
-      org.apache.spark.sql.GraftColumnBridge.releaseLocalCheckpoint(labels)
+        .drop("old"), col("improved"))
+      converged = improved == 0L
       labels = next.drop("improved")
-      if (dbg) System.err.println(f"[cc] round $it%d " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.3f s converged=$converged")
     }
     Pin.release(sym)
     // an unconverged result is WRONG (one component reported as many,

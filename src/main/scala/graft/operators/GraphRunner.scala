@@ -43,9 +43,9 @@ import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
   */
 object GraphRunner {
 
-  /** Step budget at or under which [[run]] unrolls the whole
-    * traversal into one lazy plan instead of a per-round
-    * checkpoint+count loop (see the unroll note in [[run]]). */
+  /** Rounds [[run]] unrolls into one lazy plan before a
+    * checkpoint+count probe (see the unroll note in [[run]]); a budget
+    * at or under it is one plan with no probe at all. */
   private val UnrollMax = 8
 
   def run(spark: SparkSession,
@@ -128,22 +128,17 @@ object GraphRunner {
       .withColumn("step", lit(0))
       .withColumn("path", array(col("node")))
       .withColumn("status", lit("active"))
-    val cols = states.columns.map(col)
 
-    // Small step budgets UNROLL into one lazy plan (guide §1.2: the
-    // r11/r12 measurements put ~90 % of g04's steady-state cost in
-    // the per-round checkpoint+count jobs, not the data path). One
-    // conditional projection per round applied to the WHOLE frame —
-    // a non-active row keeps every column (guards below), so round
-    // r's frame equals the loop's finished ∪ stepped(active) by
-    // construction, and running rounds past global completion is the
-    // identity. No union, no filter pair, no per-round action: plan
-    // depth grows one Project layer per round (CollapseProject does
-    // not inline non-cheap when-chains, so expressions do not
-    // compound), and the caller's single action executes the whole
-    // traversal. The early-exit probe is the only thing lost — for
-    // maxSteps ≤ UnrollMax the wasted no-op rounds are narrow
-    // projections, far cheaper than one scheduled job each.
+    // Rounds UNROLL into one lazy plan (guide §1.2: the r11/r12
+    // measurements put ~90 % of g04's steady-state cost in per-round
+    // checkpoint+count jobs, not the data path). One conditional
+    // projection per round applied to the WHOLE frame — a non-active
+    // row keeps every column (guards below), so running rounds past
+    // global completion is the identity. No union, no filter pair, no
+    // per-round action: plan depth grows one Project layer per round
+    // (CollapseProject does not inline non-cheap when-chains, so
+    // expressions do not compound), and the caller's single action
+    // executes the whole traversal.
     // three select()s per round, not six withColumn()s: every
     // withColumn re-analyzes the whole accumulated plan, and at six
     // per round the unroll's cost moved from jobs to Catalyst
@@ -181,63 +176,24 @@ object GraphRunner {
         case c => col(c)
       }: _*)
     }
-    if (maxSteps <= UnrollMax) {
-      var st = states
-      var r = 0
-      while (r < maxSteps) { st = stepAll(st); r += 1 }
-      return st.withColumn("status",
-        when(col("status") === "active", "max_steps")
-          .otherwise(col("status")))
-    }
 
-    var iter = 0
-    var activeLeft = true
-    while (activeLeft && iter < maxSteps) {
-      iter += 1
-      val active = states.filter(col("status") === "active")
-      val finished = states.filter(col("status") =!= "active")
-      // one narrow pass: execute (merge outputs), terminal check,
-      // route, then fold node/step/path/status per row
-      val stepped = active
-        .withColumn("memory", mergeCol)
-        .withColumn("tgt", when(!isTerminal, routeCol))
-        .withColumn("status",
-          when(isTerminal, "completed")
-            .when(col("tgt").isNull, "stuck")
-            .otherwise("active"))
-        .withColumn("step",
-          when(col("status") === "active", col("step") + 1)
-            .otherwise(col("step")))
-        .withColumn("path",
-          when(col("status") === "active",
-            concat(col("path"), array(col("tgt"))))
-            .otherwise(col("path")))
-        .withColumn("node",
-          when(col("status") === "active", col("tgt"))
-            .otherwise(col("node")))
-        .select(cols: _*)
-      // localCheckpoint, NOT Pin/persist: each round's state
-      // re-references the previous round's tree, so a lazy pin keeps a
-      // logical plan that grows exponentially in the round count — at
-      // maxSteps=6 that was minutes of pure Catalyst analysis before a
-      // row moved (measured: sf0.01 traversal >9 min under persist,
-      // seconds under checkpoint). This is exactly Pin's documented
-      // localCheckpoint escape hatch (unbounded iterative lineage).
-      // LAZY + a count as the materializing action: the active-left
-      // probe must scan every partition anyway, so it doubles as the
-      // checkpoint materializer — the eager variant ran a separate
-      // full-compute job and the isEmpty probe escalated through 1-3
-      // more on the terminal round. The LAST allowed round skips both
-      // (the loop exits regardless; the caller's action materializes
-      // the final narrow projection from the prior checkpoint).
-      if (iter < maxSteps) {
-        states = finished
-          .unionByName(stepped)
-          .localCheckpoint(false)
-        activeLeft = states.filter(col("status") === "active").count() > 0
-      } else {
-        states = finished.unionByName(stepped)
-        activeLeft = false
+    // Larger budgets unroll in chunks of UnrollMax rounds: between
+    // chunks, Pin.round truncates the lineage (an unbounded unroll
+    // would grow the plan with the budget) and its count of active
+    // sessions is the early exit. The last chunk gets no probe — the
+    // caller's action materializes it from the prior checkpoint — so a
+    // budget ≤ UnrollMax is exactly one lazy plan.
+    var prev: Option[DataFrame] = None
+    var left = maxSteps
+    while (left > 0) {
+      val k = math.min(left, UnrollMax)
+      (1 to k).foreach(_ => states = stepAll(states))
+      left -= k
+      if (left > 0) {
+        val (cp, active) =
+          Pin.round(prev, states, col("status") === "active")
+        states = cp; prev = Some(cp)
+        if (active == 0L) left = 0
       }
     }
     states.withColumn("status",

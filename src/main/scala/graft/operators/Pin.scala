@@ -1,25 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.storage.StorageLevel
 
 /** Reuse pin for DataFrames that fan out into several consumers (both
-  * sides of a self-join, iteration state in BFS loops).
+  * sides of a self-join, an edge list every round of a loop reads).
   *
   * Mode knob `spark.graft.pin` (session conf):
   *  - `persist` (default): lazy MEMORY_AND_DISK cache with lineage
   *    kept — no eager job barrier (measured: the localCheckpoint
   *    barrier cost 0.15–0.25 s PER PIN at sf0.1; persist cut d03
-  *    0.55→0.30 s, d06 0.47→0.29 s, and won on every pinned query
-  *    including the BFS loops), and on a cluster a lost block
-  *    recomputes from the parquet scan instead of failing the job.
+  *    0.55→0.30 s, d06 0.47→0.29 s, and won on every pinned query),
+  *    and on a cluster a lost block recomputes from the parquet scan
+  *    instead of failing the job.
   *    Callers create pins per query invocation without unpersisting;
   *    identical plans dedup in the cache manager, so a long-lived
   *    session holds one entry per distinct pinned subtree.
   *  - `localCheckpoint`: eager, truncates lineage, non-replicated
-  *    executor-local blocks. The escape hatch for unbounded iterative
-  *    lineage growth (planner bloat) — the engine's own loops are
-  *    diameter-bounded and measure faster under persist.
+  *    executor-local blocks. The engine's own loops truncate their
+  *    round state this way through [[round]], whatever the mode.
   *  - `none`: no pin (the subtree recomputes per consumer; useful for
   *    measuring what a pin is worth).
   */
@@ -80,26 +79,22 @@ object Pin {
     * checkpointed frames never register with the cache manager). */
   def release(df: DataFrame): Unit = df.unpersist(blocking = false)
 
-  /** Rolling release for iterative loops, which pin a NEW plan every
-    * round — without release a long-lived session would accumulate one
-    * cache entry per round per call. A round's pins may still back
-    * LAZY frames built one round later (e.g. BFS `visited_r =
-    * union(visited_(r-1), next_r)` only materializes during round
-    * r+1's action), so `advance()` — called once per round, AFTER the
-    * round's action — releases the pins from two rounds back: by then
-    * every consumer has materialized. The final ≤3 generations stay
-    * cached (a bounded constant per call) because the loop's return
-    * value is still lazy on them. */
-  final class Ledger {
-    private var cur: List[DataFrame] = Nil
-    private var prev1: List[DataFrame] = Nil
-    private var prev2: List[DataFrame] = Nil
-    def pin(df: DataFrame): DataFrame = {
-      val p = Pin(df); cur = p :: cur; p
-    }
-    def advance(): Unit = {
-      prev2.foreach(release); prev2 = prev1; prev1 = cur; cur = Nil
-    }
+  /** One round of an iterative driver (connected components, the
+    * GraphRunner chunk loop, distributed BFS). A round's state
+    * re-references the previous round's tree, so a lazy persist would
+    * keep a plan that grows with the round count; `next` gets a LAZY
+    * localCheckpoint instead, and counting its `pending` rows — the
+    * round's only action, a scan of every partition — is what
+    * materializes it. `prev`, the checkpoint the previous round
+    * returned, then has no consumer left: its executor blocks are freed
+    * now instead of at driver GC. The last round's checkpoint backs
+    * the loop's result and stays. Returns (checkpoint, pending rows). */
+  private[operators] def round(prev: Option[DataFrame], next: DataFrame,
+      pending: Column): (DataFrame, Long) = {
+    val cp = next.localCheckpoint(false)
+    val n = cp.filter(pending).count()
+    prev.foreach(GraftColumnBridge.releaseLocalCheckpoint)
+    (cp, n)
   }
 }
 

@@ -44,7 +44,7 @@ object GraphQueries {
   // g01 reachability — BFS min-depth from the first node over the
   // above-average transition graph (reachability semi-join,
   // edge.py:626-660; unreachable detection, executor.py:259-269).
-  // Spark side: iterative frontier joins; oracle: recursive CTE.
+  // Spark side: GraphOps.reachable; oracle: recursive CTE.
   val g01 = Q(
     "g01_reachability",
     s"""$edgesCte,
@@ -61,12 +61,12 @@ object GraphQueries {
       val nodes = Pin(Tables.load(s, dir, "events") // entry pick + final left join reuse
         .select(col("event_type").as("id")).distinct())
       val entry = nodes.agg(min("id")).head().getString(0)
-      // the transition graph is post-aggregation (≤ |event types|
-      // nodes): BFS on the collected edge list, not per-depth joins.
-      // maxIters = 6 matches the oracle's recursion cap (depth < 6 →
-      // max emitted depth 6) so both sides bound identically on any
-      // graph shape.
-      val r = GraphOps.reachableLocal(e, Seq(entry), maxIters = 6)
+      // the transition graph is post-aggregation (≤ |event types|²
+      // edges), so reachable's size gate runs the BFS on the collected
+      // edge list, not per-depth joins. maxIters = 6 matches the
+      // oracle's recursion cap (depth < 6 → max emitted depth 6) so
+      // both sides bound identically on any graph shape.
+      val r = GraphOps.reachable(e, Seq(entry), maxIters = 6)
       nodes.join(r, nodes("id") === r("node"), "left")
         .select(col("id").as("node"),
           col("depth").isNotNull.as("reachable"), col("depth"))
@@ -213,9 +213,10 @@ object GraphQueries {
   // g04 multi-session graph traversal — the ONE §2.10 capability that
   // was spec-only (VERDICT r7 ask #4): [[graft.operators.GraphRunner]]
   // steps every user session as a ROW through a conditional-edge
-  // workflow graph (executor.py:286-1300 vectorized — one join + one
-  // window per step for ALL sessions), here oracle-verified end to
-  // end. The fixture graph exercises every routing primitive at once:
+  // workflow graph (executor.py:286-1300 vectorized — one compiled
+  // when-chain projection per step for ALL sessions), here
+  // oracle-verified end to end. The fixture graph exercises every
+  // routing primitive at once:
   //  - on_failure vs always at different priorities (signup: failed
   //    sessions have BOTH traversable; priority 2 wins → error);
   //  - CONDITIONAL safe_eval over seeded memory
@@ -236,10 +237,10 @@ object GraphQueries {
   // the carried (n, success, seen) state, exactly the memory the
   // Spark side consults.
   //
-  // Scale shape: each of the ≤6 iterations is one broadcast edge join
-  // + one row_number window over the ACTIVE sessions only, pinned per
-  // step (Pin.Ledger) — a million concurrent sessions run the same
-  // 6-stage plan; there is no per-session anything in the driver.
+  // Scale shape: the 6 steps unroll into one lazy plan of narrow
+  // projections — zero shuffles per step, the session groupBy the
+  // plan's only exchange — so a million concurrent sessions run the
+  // same plan; there is no per-session anything in the driver.
   private val G04MaxSteps = 6
   val g04 = Q(
     "g04_graph_traversal",

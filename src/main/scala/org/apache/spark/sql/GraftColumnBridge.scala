@@ -11,7 +11,7 @@ object GraftColumnBridge {
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** Free the executor blocks behind an EAGER `localCheckpoint` frame.
+  /** Free the executor blocks behind a `localCheckpoint` frame.
     * `Dataset.unpersist` is a no-op for checkpointed frames (they never
     * register with the cache manager), so without this the blocks live
     * until the driver happens to GC the RDD reference — unbounded

@@ -46,20 +46,17 @@ class GraphOpsSpec extends SparkTestBase {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
-  /** Force the distributed label-propagation loop (the 100 TB path):
-    * small test graphs would otherwise take the driver-local
-    * union-find fast path and leave the loop untested. */
-  private def distributedOnly[T](body: => T): T = {
-    spark.conf.set(GraphOps.LocalMaxEdgesKey, "0")
-    try body
-    finally spark.conf.unset(GraphOps.LocalMaxEdgesKey)
-  }
+  /** The distributed label-propagation loop (the 100 TB path): a
+    * size gate of 0 edges, since small test graphs would otherwise take
+    * the driver-local union-find fast path and leave the loop untested. */
+  private def distributedCC(e: org.apache.spark.sql.DataFrame,
+      maxIters: Int = 50) = GraphOps.connectedComponents(e, maxIters, 0)
 
   test("connectedComponents: long path needs diameter rounds, converges") {
     // a 12-node path labelled in REVERSE so the min (1) sits at one
     // end and must flood 11 hops — exercises the iteration ledger
     val e = (1L to 11L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = distributedOnly(GraphOps.connectedComponents(e)).collect()
+    val got = distributedCC(e).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (1L to 12L).map(_ -> 1L).toMap)
   }
@@ -69,8 +66,7 @@ class GraphOpsSpec extends SparkTestBase {
     // finish — silent partial labels would report one chain as many
     // components, so it must throw instead
     val e = (1L to 199L).map(i => (i, i + 1)).toDF("src", "dst")
-    intercept[IllegalStateException](distributedOnly(
-      GraphOps.connectedComponents(e, maxIters = 3)))
+    intercept[IllegalStateException](distributedCC(e, maxIters = 3))
   }
 
   test("connectedComponents: pointer jumping converges a 300-node " +
@@ -78,7 +74,7 @@ class GraphOpsSpec extends SparkTestBase {
     // plain flooding needs 299 rounds (> default maxIters 50); path
     // halving needs ~O(log d) — the default budget must suffice
     val e = (1L to 299L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = distributedOnly(GraphOps.connectedComponents(e)).collect()
+    val got = distributedCC(e).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (1L to 300L).map(_ -> 1L).toMap)
   }
@@ -94,18 +90,32 @@ class GraphOpsSpec extends SparkTestBase {
       val longDf = edges.toDF("src", "dst")
       val local = GraphOps.connectedComponents(longDf).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = distributedOnly(GraphOps.connectedComponents(longDf))
+      val dist = distributedCC(longDf)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(local === dist, s"trial $trial (long ids)")
+      // reachable's in-process BFS vs its distributed loop (gate 0),
+      // under a depth cap and run to the fixpoint
+      def reachAgrees(df: org.apache.spark.sql.DataFrame, entry: String,
+          ids: String): Unit = Seq(2, 100).foreach { it =>
+        def reach(localMax: Int) = GraphOps
+          .reachable(df, Seq(entry), it, localMax).collect()
+          .map(r => r.getString(0) -> r.getInt(1)).toMap
+        val inProc = reach(GraphOps.LocalMaxEdges)
+        assert(inProc.size > 1, s"trial $trial: BFS found no successors")
+        assert(inProc === reach(0),
+          s"trial $trial (reachable, $ids ids, maxIters $it)")
+      }
+      reachAgrees(longDf, edges.head._1.toString, "long")
       // string ids: the local comparator must elect Spark min()'s
       // canonical id (unsigned UTF-8 ordering)
       val strDf = edges.map { case (a, b) => (s"n$a", s"n$b") }
         .toDF("src", "dst")
       val localS = GraphOps.connectedComponents(strDf).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
-      val distS = distributedOnly(GraphOps.connectedComponents(strDf))
+      val distS = distributedCC(strDf)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(localS === distS, s"trial $trial (string ids)")
+      reachAgrees(strDf, s"n${edges.head._1}", "string")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{GraphOps, Pin}
+import graft.operators.Pin
 import graft.queries.TextDedup
 import org.apache.spark.sql.Row
 
@@ -59,17 +59,5 @@ class PinSpec extends SparkTestBase {
       spark.conf.unset(Pin.MaxEstBytesKey)
       spark.sharedState.cacheManager.clearCache()
     }
-  }
-
-  test("BFS reachability identical across pin modes") {
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"))
-      .toDF("src", "dst")
-    def reach(mode: String): Set[(String, Int)] = withMode(mode) {
-      GraphOps.reachable(edges, Seq("a"), maxIters = 10)
-        .as[(String, Int)].collect().toSet
-    }
-    val base = reach("localCheckpoint")
-    assert(base === Set(("a", 0), ("b", 1), ("c", 2), ("d", 3)))
-    assert(reach("persist") === base)
   }
 }

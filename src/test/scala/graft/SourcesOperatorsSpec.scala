@@ -789,8 +789,10 @@ class MoreOperatorsSpec extends SparkTestBase {
       .toDF("run_id", "goal_id", "status", "error")
     assert(BuilderQueries.topFailures(emptyRuns).count() === 0)
     val emptyEdges = Seq.empty[(String, String)].toDF("src", "dst")
-    assert(GraphOps.reachableLocal(emptyEdges, Seq("a")).count() === 1)
-    assert(GraphOps.reachable(emptyEdges, Seq("a")).count() === 1)
+    // an empty edge list fits any gate ≥ 0; -1 sends it down the
+    // distributed loop
+    Seq(GraphOps.LocalMaxEdges, -1).foreach(localMax => assert(GraphOps
+      .reachable(emptyEdges, Seq("a"), 100, localMax).count() === 1))
   }
 
   test("GraphRunner: N sessions traverse conditional routes as rows " +
@@ -826,6 +828,69 @@ class MoreOperatorsSpec extends SparkTestBase {
     val mem = out.filter(col("state_id") === "s1")
       .head().getAs[Map[String, String]]("memory")
     assert(mem("classified") === "yes")
+  }
+
+  test("GraphRunner: chunked unroll keeps results across chunk " +
+      "boundaries, frees its per-round checkpoints, and runs no job " +
+      "before the caller's action at small budgets") {
+    import spark.implicits._
+    import graft.model.Model.EdgeSpec
+    import graft.operators.GraphRunner
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // a 20-node chain n0 -> ... -> n19 (terminal): a session starting at
+    // n_k moves 19-k times and completes in round 20-k. Rounds unroll
+    // in chunks of 8, so k = 15 completes inside chunk 1, k = 12 and
+    // k = 4 exactly on the chunk 1 / chunk 2 boundaries, and k = 0 in
+    // chunk 3, the last one the early exit lets run
+    val edges = (0 until 19).map(i => EdgeSpec(s"n$i", s"n${i + 1}"))
+    val offsets = Seq(15, 12, 4, 0)
+    val init = offsets.map(k => (s"s$k", s"n$k", true,
+      Map.empty[String, String])).toDF("state_id", "node", "success", "memory")
+    def traverse(maxSteps: Int) =
+      GraphRunner.run(spark, edges, Set("n19"), init, Map.empty, maxSteps)
+    def byId(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => r.getAs[String]("state_id") ->
+        ((r.getAs[String]("status"), r.getAs[Seq[String]]("path")))).toMap
+    def chain(from: Int, to: Int) = (from to to).map(i => s"n$i")
+
+    val rdds = spark.sparkContext.getPersistentRDDs.size
+    val full = byId(traverse(100))
+    offsets.foreach(k =>
+      assert(full(s"s$k") === (("completed", chain(k, 19))), s"offset $k"))
+    // each round's checkpoint is released once the next is counted;
+    // only the last one, backing the result, stays
+    assert(spark.sparkContext.getPersistentRDDs.size <= rdds + 1)
+
+    // budget 12 = one full chunk + a last chunk of 4 with no probe
+    val capped = byId(traverse(12))
+    assert(capped("s0") === (("max_steps", chain(0, 12))))
+    Seq(15, 12).foreach(k =>
+      assert(capped(s"s$k") === (("completed", chain(k, 19)))))
+    assert(capped("s4") === (("max_steps", chain(4, 16))))
+
+    // budget 6 is one lazy plan: building it starts no job. The fence
+    // job runs after the build; listener events arrive in order, so
+    // once its start is seen every earlier job's start has been too
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("?"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val lazyPlan = traverse(6)
+      spark.sparkContext.setJobDescription("fence")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.toArray.toSeq === Seq("fence"),
+        "GraphRunner.run started a job while building a 6-step plan")
+      assert(byId(lazyPlan)("s15") === (("completed", chain(15, 19))))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("GraphRunner: failing condition evaluations route False, not abort " +
