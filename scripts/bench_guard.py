@@ -20,18 +20,12 @@ Usage:
       # class sf0.1 cannot see: a pin silently dropped, a join
       # re-planned superlinear — visible only when the data is big
       # enough for the plan shape to dominate the scheduling floor.
-  python3 scripts/bench_guard.py --scale1000 [--update]
-      # FRONTIER mode (VERDICT r9 ask #2): the Heaps 1000x tier (5M
-      # docs / 2M vectors, /tmp/heaps_1000x) against
-      # scripts/bench_reference_1000x.json. HOURS per full pass — for
-      # deliberate campaigns, not the per-commit gate. Defaults
-      # SPARK_DRIVER_MEM=64g for the forked profile JVM.
-  python3 scripts/bench_guard.py --scale1000 --only d02,d06,s06
+  python3 scripts/bench_guard.py --scale --only d02,d06,s06
       # SPOT-CHECK: guard only the named queries against the committed
       # reference. The median-scale normalization then runs over just
       # those queries, so pick a cross-family handful (>= 3) — meant
-      # for a same-day sanity pass after recording a frontier
-      # reference, when a second multi-hour full pass buys nothing.
+      # for a same-day sanity pass when a second full pass buys
+      # nothing.
 
 Run it before committing any change touching query plans; the driver
 can run it per-round. Re-baseline deliberately after a judged perf
@@ -44,18 +38,14 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# --scale = Heaps 10x (the per-commit at-scale gate); --scale1000 =
-# Heaps 1000x (5M docs / 2M vectors — the round-10 frontier tier; a
-# ~full-hour run, for deliberate campaigns rather than every commit)
-SCALE1000 = "--scale1000" in sys.argv
-SCALE = SCALE1000 or "--scale" in sys.argv
-SCALE_MULT = "1000" if SCALE1000 else "10"
+# --scale = Heaps 10x (the per-commit at-scale gate)
+SCALE = "--scale" in sys.argv
 REF_PATH = os.path.join(
     REPO, "scripts",
-    f"bench_reference_{SCALE_MULT}x.json" if SCALE
+    "bench_reference_10x.json" if SCALE
     else "bench_reference.json")
 SCALE_DIR = os.environ.get("GRAFT_SCALE_DIR",
-                           f"/tmp/heaps_{SCALE_MULT}x")
+                           "/tmp/heaps_10x")
 # at-scale runs tolerate more relative noise (fewer, longer queries;
 # one I/O burst shifts a 3 s query further than a 0.3 s one) but
 # demand a bigger absolute move before flagging
@@ -65,13 +55,7 @@ ABS_TOL = 0.50 if SCALE else 0.15
 # transient I/O-wait bursts (~1 s, loadavg 2-3 on an idle box) that can
 # cover BOTH timed reps of a 3-rep profile and fake a 2x regression on
 # a random query; two extra reps make the min burst-resistant.
-REPS = int(os.environ.get("GRAFT_GUARD_REPS",
-                          "3" if SCALE1000 else "5"))
-# the forked profile JVM sizes its heap from SPARK_DRIVER_MEM
-# (build.sbt javaOptions); the 1000x tier needs more than the 8g
-# default for d02/s06's inverted indexes over 275M tokens
-if SCALE1000:
-    os.environ.setdefault("SPARK_DRIVER_MEM", "64g")
+REPS = int(os.environ.get("GRAFT_GUARD_REPS", "5"))
 
 
 def ensure_scale_corpus():
@@ -80,11 +64,11 @@ def ensure_scale_corpus():
     the reference was recorded on."""
     if os.path.isfile(os.path.join(SCALE_DIR, "documents.parquet")):
         return
-    print(f"generating {SCALE_DIR} (Heaps {SCALE_MULT}x, "
+    print(f"generating {SCALE_DIR} (Heaps 10x, "
           "deterministic seed)...")
     subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "gen_scale.py"),
-         SCALE_DIR, SCALE_MULT, "heaps"],
+         SCALE_DIR, "10", "heaps"],
         check=True, cwd=REPO)
 
 
@@ -97,7 +81,7 @@ def run_profile(queries):
                SPARK_GRAFT_REPS=str(REPS))
     cmd = ["sbt", "-batch",
            f"runMain graft.BenchProfile {','.join(sorted(queries))}"]
-    limit = 10800 if SCALE1000 else 3600 if SCALE else 1800
+    limit = 3600 if SCALE else 1800
     try:
         proc = subprocess.run(cmd, cwd=REPO, env=env, capture_output=True,
                               text=True, timeout=limit)
@@ -118,8 +102,8 @@ def run_profile(queries):
 
 # The 29-query heavy family of the Heaps campaign tables
 # (COVERAGE.md): --update bootstraps a MISSING reference from this
-# list instead of crashing at open(REF_PATH) (ADVICE r10 — the
-# frontier reference must be creatable by the tool that consumes it;
+# list instead of crashing at open(REF_PATH) (ADVICE r10 — a
+# reference must be creatable by the tool that consumes it;
 # scripts/profile_to_reference.py over a campaign log is the other
 # route). A present reference always wins — its committed query list
 # is the guard's contract.
@@ -150,7 +134,7 @@ def load_ref_doc():
     import time
     return {
         "_recorded": time.strftime("%Y-%m-%d") + " (bootstrapped)",
-        "_regime": (f"Heaps {SCALE_MULT}x corpus ({SCALE_DIR}, "
+        "_regime": (f"Heaps 10x corpus ({SCALE_DIR}, "
                     "gen_scale.py seed-fixed), 8 cpus, persist pin, "
                     f"{REPS}-rep steady state"),
         "queries": {q: 0.0 for q in HEAVY_FAMILY},

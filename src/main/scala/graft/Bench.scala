@@ -1,4 +1,6 @@
 package graft
+
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -49,7 +51,7 @@ object Bench {
     // Per-table try: one missing table must not silently skip the rest.
     Tables.names.foreach { n =>
       try Tables.load(spark, sfDir, n).count()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] warm $n failed: ${e.getMessage}")
       }
     }
@@ -75,7 +77,7 @@ object Bench {
     val results = SparkEntry.queries.map { case (name, fn) =>
       qLoads(name) = osBean.getSystemLoadAverage
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       val reps = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         // noop sink: computes every output column (count() would let
@@ -84,7 +86,7 @@ object Bench {
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             true
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             // a failing query must be VISIBLE, not a silently-fast entry
             if (!failed.contains(name)) {
               failed += name
@@ -127,7 +129,7 @@ object Bench {
           "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
             .findAllMatchIn(qblock)
             .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        } catch { case _: Throwable => Map.empty[String, Double] }
+        } catch { case NonFatal(_) => Map.empty[String, Double] }
       else Map.empty
     val ratios = results.collect {
       case (n, t) if refs.contains(n) => t / refs(n) }.toSeq.sorted
@@ -148,7 +150,7 @@ object Bench {
             try {
               fn(spark, sfDir).write.format("noop").mode("overwrite").save()
               true
-            } catch { case _: Throwable => false }
+            } catch { case NonFatal(_) => false }
           ((System.nanoTime() - t0) / 1e9, ok)
         }
         val good = reruns.filter(_._2)
@@ -209,7 +211,7 @@ object Bench {
       java.nio.file.Files.write(out,
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       System.err.println(s"[bench] wrote ${out.toAbsolutePath}")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}")
     }
     spark.stop()

@@ -22,14 +22,9 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, usage)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+      Map("spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[4]"),
+        "spark.sql.extensions" -> classOf[GraftExtensions].getName))
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args.toList)
     finally spark.stop()

@@ -8,7 +8,15 @@ import org.apache.spark.sql.SparkSession
   * size-first AQE coalescing) is load-bearing for the oracle compare —
   * it lived as three hand-synced copies across Bench/Verify/
   * BenchProfile, where adding a config to one main silently benches a
-  * different engine than the one verified.
+  * different engine than the one verified. Every entry point (the
+  * mains, `Cli`, the specs' `SparkTestBase`, enginebench) builds its
+  * session here.
+  *
+  * That is also what makes the codegen cache size hold. The size is a
+  * static conf, read once per JVM, when Spark's code generator is first
+  * used, from the session active at that moment; a JVM whose first
+  * session was built elsewhere keeps the 100-entry default for its
+  * whole life, whatever later sessions set.
   */
 object Sessions {
 
@@ -66,6 +74,19 @@ object Sessions {
       // unaffected.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
+      // Compile each generated class once per JVM. Spark keeps compiled
+      // whole-stage and expression classes in an LRU cache of
+      // `spark.sql.codegen.cache.maxEntries` entries, 100 by default;
+      // the registry's plans produce far more distinct classes than
+      // that, so every steady pass evicted and recompiled them (and the
+      // JIT then recompiled the new classes). Without the stage id in
+      // the class name, the same pipeline at another codegen stage id
+      // is the same source and hits the cache. Sized from a measured
+      // pass: the full 134-query registry at sf0.1 fills 1,560 entries
+      // and grows metaspace by 68 MB; 4000 leaves 2.5x headroom and
+      // bounds the cache's metaspace near 175 MB.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
   }

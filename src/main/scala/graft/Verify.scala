@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,13 +21,13 @@ object Verify {
       val target = new org.apache.hadoop.fs.Path(s"$outDir/$name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(target.toString)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failure must not leave a PREVIOUS run's parquet behind —
         // stale output would hash-match and mask the regression as a
         // pass; a missing dir makes the compare report the failure
         try target.getFileSystem(hadoopConf).delete(target, true)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     }
     val json = SparkEntry.oracleSql

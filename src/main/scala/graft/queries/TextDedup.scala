@@ -3,7 +3,7 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.operators.{GraphOps, Par, Pin}
 import graft.functions.{Fns, VectorExprs}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -346,7 +346,13 @@ object TextDedup {
         col(s"m${2 * band}") * lit(2147483647L) + col(s"m${2 * band + 1}"))
       val bands = sig.select(col("doc_id"),
         posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
-      val cand = bands.toDF("doc_a", "band", "bkey")
+      // The left input is never broadcast. Both inputs read the same
+      // pin; on a cold pin AQE would otherwise broadcast whichever
+      // side's cache stage finished first, so the build side, and with
+      // it the join's generated class, changed from one invocation to
+      // the next.
+      val cand = GraftColumnBridge.noBroadcast(
+          bands.toDF("doc_a", "band", "bkey"))
         .join(bands.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b")

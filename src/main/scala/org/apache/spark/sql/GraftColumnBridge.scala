@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, NO_BROADCAST_HASH, ResolvedHint}
 
 /** Bridge to the `private[sql]` Column↔Expression converters — the
   * supported way for a library to wrap its own Catalyst expressions as
@@ -23,4 +24,15 @@ object GraftColumnBridge {
       case lr: execution.LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** `df` as a join input that is never broadcast: Catalyst's
+    * `NO_BROADCAST_HASH` strategy hint (the one AQE itself puts on a
+    * side it would rather stream), which has no public hint name. The
+    * other input may still be broadcast, and with neither broadcast the
+    * join shuffles as usual, so no size is forced at any scale. */
+  def noBroadcast(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession, ResolvedHint(ds.logicalPlan,
+      HintInfo(strategy = Some(NO_BROADCAST_HASH))))
+  }
 }

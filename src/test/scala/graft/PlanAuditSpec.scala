@@ -160,17 +160,23 @@ class PlanAuditSpec extends SparkTestBase {
     // hash-distribution requirement, folding real at-scale exchanges
     // out of the plan. Pinning the per-partition quantum to 1 byte
     // forces multi-partition widths at any SF, so the counts below
-    // keep auditing what a 100 TB corpus pays.
+    // keep auditing what a 100 TB corpus pays. For the same reason
+    // pinned plans keep their planned output partitioning here: under
+    // the Sessions.local config AQE coalesces a sub-MB pin to ONE
+    // partition, which again satisfies every distribution (t10's
+    // pinned counts then skip an exchange a multi-partition pin pays:
+    // 3, not 4).
     // hermetic audit: earlier suites in the shared JVM leave runtime
-    // confs and cache entries behind (observed: t10 audited 3 in the
-    // full suite vs 4 standalone), and a substituted cache entry or a
-    // drifted conf changes which exchanges this walk sees. A fresh
+    // confs and cache entries behind, and a substituted cache entry or
+    // a drifted conf changes which exchanges this walk sees. A fresh
     // session drops every runtime conf mutation (keeping the builder
-    // config: partitions=2, UTC, AQE defaults); the cache manager is
+    // config: Sessions.local at 2 partitions); the cache manager is
     // SHARED state, so clear it too — the audited values are recorded
     // from a cold cache.
     val s = spark.newSession()
     s.conf.set(operators.Par.BytesPerPartKey, "1")
+    s.conf.set(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
     s.sharedState.cacheManager.clearCache()
     // audited 2026-08-13 (round 5) at sf0.001, shuffle.partitions=2,
     // AQE on (it broadcasts every join small enough at this SF — the
