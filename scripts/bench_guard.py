@@ -77,7 +77,6 @@ def run_profile(queries):
                SPARK_GRAFT_SF_DIR=SCALE_DIR if SCALE
                else "/root/testdata/sf0.1",
                SPARK_GRAFT_CPUS="8",
-               SPARK_GRAFT_PIN="persist",
                SPARK_GRAFT_REPS=str(REPS))
     cmd = ["sbt", "-batch",
            f"runMain graft.BenchProfile {','.join(sorted(queries))}"]

@@ -37,14 +37,13 @@ for s in $SCALES; do
   rc=0
   SPARK_GRAFT_SF_DIR=/tmp/heaps_$s \
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  SPARK_GRAFT_PIN=persist \
   SPARK_GRAFT_REPS="${SPARK_GRAFT_REPS:-3}" \
   java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -Djava.io.tmpdir="$RUNTMP" \
     -Xmx"${SPARK_DRIVER_MEM:-48g}" \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
     graft.BenchProfile "$Q" 2>"$RUNTMP/stderr.log" \
-    | stdbuf -oL grep -E 'PROFILE|WARMPASS' || rc=$?
+    | stdbuf -oL grep -E '^(PROFILE|COUNTS) ' || rc=$?
   if [ "$rc" -ne 0 ]; then
     echo "=== heaps_$s FAILED rc=$rc ==="
     tail -30 "$RUNTMP/stderr.log" | sed 's/^/    /' || true

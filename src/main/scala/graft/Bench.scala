@@ -184,12 +184,10 @@ object Bench {
     // the artifact itself instead of needing a full re-run — system
     // load average at start+end of the suite, machine cores vs the
     // requested thread count, and the pin regime the numbers were
-    // taken under
+    // taken under (always persist; the field keeps the line's shape)
     val loadEnd = osBean.getSystemLoadAverage
-    val envJson = {
-      val pin = spark.conf.getOption("spark.graft.pin").getOrElse("persist")
-      s"""{"load_avg_start":${ms(loadStart)},"load_avg_end":${ms(loadEnd)},"load_at_launch":${ms(loadAtLaunch)},"load_gate_threshold":${ms(gateThreshold)},"load_gate_waited_sec":$gateWaited,"nproc":${Runtime.getRuntime.availableProcessors},"cpus_env":${Sessions.jsonEscape(cpus)},"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${Sessions.jsonEscape(spark.conf.get("spark.sql.shuffle.partitions"))},"pin":${Sessions.jsonEscape(pin)},"ref_scale":${ms(refScale)},"n_retried":${retried.size}}"""
-    }
+    val envJson =
+      s"""{"load_avg_start":${ms(loadStart)},"load_avg_end":${ms(loadEnd)},"load_at_launch":${ms(loadAtLaunch)},"load_gate_threshold":${ms(gateThreshold)},"load_gate_waited_sec":$gateWaited,"nproc":${Runtime.getRuntime.availableProcessors},"cpus_env":${Sessions.jsonEscape(cpus)},"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${Sessions.jsonEscape(spark.conf.get("spark.sql.shuffle.partitions"))},"pin":"persist","ref_scale":${ms(refScale)},"n_retried":${retried.size}}"""
     // compact suite-total line FIRST (always parseable even if the
     // driver's capture clips the long detail line), then the full
     // contract line with per-query times, then the compact line AGAIN

@@ -1,10 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Local profiling aid (not part of the driver contract): runs each
-  * query N times in one session and prints per-run times, separating
-  * one-shot cost (Catalyst analysis + Janino codegen + AQE re-plan)
-  * from steady-state data-path time. */
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskStart}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+
+/** Local profiling main (not part of the driver contract): runs each
+  * query N times in one session and prints two lines per query:
+  * {{{
+  * PROFILE <name> t1 t2 …                 seconds per rep, end to end
+  * COUNTS <name> build=b1,b2,… jobs=j1,j2,… stages=… tasks=…
+  * }}}
+  * Rep 1 carries the one-shot cost (Catalyst, Janino codegen, AQE
+  * re-plans, pin fills); reps 2+ are the steady state. `build` is the
+  * seconds until `fn(spark, dir)` returned, which includes any job run
+  * while the plan is built. The counts are the jobs, stages and tasks
+  * each rep scheduled; they depend on the plan shape, not the clock,
+  * which makes them the signal to read on a noisy box.
+  *
+  * Environment: `SPARK_GRAFT_SF_DIR` (tables), `SPARK_GRAFT_CPUS`
+  * (default 8, as in `Bench`), `SPARK_GRAFT_REPS` (default 3) and
+  * `SPARK_GRAFT_ISOLATE` (see [[profile]]). The optional argument is
+  * a comma-separated list of query names.
+  * {{{ SPARK_GRAFT_SF_DIR=... sbt "runMain graft.BenchProfile q1,q2" }}}
+  */
 object BenchProfile {
   // Locale.ROOT: bench_guard.py parses these lines with a dot-decimal
   // regex; a comma-decimal JVM locale would make every time parse as 0
@@ -13,60 +32,69 @@ object BenchProfile {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** One rep: end-to-end and construction seconds, and the jobs,
+    * stages and tasks it scheduled. */
+  private[graft] final case class Rep(secs: Double, buildSecs: Double,
+      jobs: Long, stages: Long, tasks: Long)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val isolate = sys.env.get("SPARK_GRAFT_ISOLATE").contains("true")
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSet) else None
-    val spark = Sessions.local(cpus, Map(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "false"),
-      "spark.sql.adaptive.enabled" ->
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"),
-      graft.operators.Pin.Key ->
-        sys.env.getOrElse("SPARK_GRAFT_PIN", "localCheckpoint"),
-      // spill/shuffle codec knob: lz4 (the Spark default) for parity
-      // with every committed bench reference; zstd trades ~2x better
-      // spill compression for some CPU — the production choice when
-      // shuffle volume is the binding constraint, and the escape
-      // hatch when a frontier tier's per-rep spill outgrows local
-      // scratch (any run using it must say so in its regime note)
-      "spark.io.compression.codec" ->
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
-      // generic A/B passthrough for profiling sessions: "k=v;k2=v2"
-      ++ sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-        .flatMap(_.split(";")).map(_.split("=", 2))
-        .collect { case Array(k, v) => k.trim -> v.trim })
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
-    // optional: untimed pass over the whole suite at a (small) warm
-    // dir first — measures how much of the per-query cost is
-    // plan-shape-keyed cache (Janino codegen, parquet footers, JIT)
-    sys.env.get("SPARK_GRAFT_WARM_DIR").foreach { wd =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, wd).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-      println(s"WARMPASS ${fmt((System.nanoTime() - t0) / 1e9)} s")
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+    profile(spark, sfDir, queries, reps, isolate)
+    spark.stop()
+  }
+
+  /** Runs each query `reps` times into the noop sink, printing its
+    * PROFILE and COUNTS lines as soon as its reps finish (a long
+    * campaign streams them), and returns every query's reps.
+    *
+    * The counts are complete: after each rep's clock stops, the
+    * listener bus is drained, so every event of that rep is counted
+    * and none spills into the next one.
+    *
+    * `isolate` drops all cache entries AFTER each query so reps
+    * measure the query alone. Without it a long multi-query profile
+    * accumulates every query's pins in one JVM until storage memory
+    * saturates and later queries' reps inflate from eviction/disk
+    * churn (observed at Heaps-100x with 29 queries: the s-family's
+    * rep 3 ran 2-4x rep 1). Isolation is the honest per-query steady
+    * state for campaign tables; the default (accumulate) matches a
+    * long-lived shared session and is what the bench_guard references
+    * were recorded with. */
+  private[graft] def profile(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      reps: Int, isolate: Boolean): Seq[(String, Seq[Rep])] = {
+    val jobs, stages, tasks = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+      override def onTaskStart(t: SparkListenerTaskStart): Unit =
+        tasks.incrementAndGet()
     }
-    // SPARK_GRAFT_ISOLATE=true: drop all cache entries AFTER each
-    // query so reps measure the query alone. Without it a long multi-
-    // query profile accumulates every query's persist pins in one JVM
-    // until storage memory saturates and later queries' reps inflate
-    // from eviction/disk churn (observed at Heaps-100x with 29
-    // queries: the s-family's rep 3 ran 2-4x rep 1). Isolation is the
-    // honest per-query steady state for campaign tables; the default
-    // (accumulate) matches a long-lived shared session and is what
-    // the bench_guard references were recorded with.
-    val isolate = sys.env.get("SPARK_GRAFT_ISOLATE").contains("true")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (only.forall(_.contains(name))) {
-        val times = (1 to reps).map { i =>
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      GraftColumnBridge.drainListenerBus(sc)
+      queries.map { case (name, fn) =>
+        val runs = (1 to reps).map { i =>
+          val (j0, s0, k0) = (jobs.get, stages.get, tasks.get)
           val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val df = fn(spark, sfDir)
+          val t1 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          val t2 = System.nanoTime()
+          GraftColumnBridge.drainListenerBus(sc)
           // ONE query's reps can ENOSPC the scratch disk before the
           // post-query cleanup below ever runs: every rep re-shuffles
           // (a fresh action = fresh shuffle IDs — nothing is reused
@@ -79,19 +107,19 @@ object BenchProfile {
           // stops, so the pause is untimed; the persist pin is
           // registry-held and survives GC.
           if (isolate && i < reps) System.gc()
-          dt
+          Rep((t2 - t0) / 1e9, (t1 - t0) / 1e9,
+            jobs.get - j0, stages.get - s0, tasks.get - k0)
         }
-        println(f"PROFILE $name%-28s ${times.map(fmt).mkString(" ")}")
+        println(f"PROFILE $name%-28s ${runs.map(r => fmt(r.secs)).mkString(" ")}")
+        def each(f: Rep => Any) = runs.map(f).mkString(",")
+        println(s"COUNTS $name build=${each(r => fmt(r.buildSecs))} " +
+          s"jobs=${each(_.jobs)} stages=${each(_.stages)} tasks=${each(_.tasks)}")
         if (isolate) {
-          // clearCache() only drops CacheManager (persist) entries;
-          // under PIN=localCheckpoint the checkpointed-RDD blocks are
-          // NOT catalog-tracked (ADVICE r10) — unpersist them through
-          // the context's persistent-RDD registry so isolation frees
-          // storage under every pin mode, not just the campaign's
-          // persist regime.
           spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          // the iterative drivers' last-round checkpoints never
+          // register with the cache manager; free their blocks through
+          // the context's persistent-RDD registry
+          sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
           // shuffle FILES are only deleted when the ContextCleaner
           // sees their ShuffleDependency get GC'd — a 29-query
           // campaign at the 1000x tier otherwise accumulates every
@@ -101,8 +129,8 @@ object BenchProfile {
           // (min of reps 2+) already excludes.
           System.gc()
         }
+        name -> runs
       }
-    }
-    spark.stop()
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * it lived as three hand-synced copies across Bench/Verify/
   * BenchProfile, where adding a config to one main silently benches a
   * different engine than the one verified. Every entry point (the
-  * mains, `Cli`, the specs' `SparkTestBase`, enginebench) builds its
-  * session here.
+  * mains `Bench`, `Verify`, `BenchProfile` and `PlanAudit`, `Cli`, the
+  * specs' `SparkTestBase`, enginebench) builds its session here.
   *
   * That is also what makes the codegen cache size hold. The size is a
   * static conf, read once per JVM, when Spark's code generator is first

@@ -6,26 +6,19 @@ import org.apache.spark.storage.StorageLevel
 /** Reuse pin for DataFrames that fan out into several consumers (both
   * sides of a self-join, an edge list every round of a loop reads).
   *
-  * Mode knob `spark.graft.pin` (session conf):
-  *  - `persist` (default): lazy MEMORY_AND_DISK cache with lineage
-  *    kept — no eager job barrier (measured: the localCheckpoint
-  *    barrier cost 0.15–0.25 s PER PIN at sf0.1; persist cut d03
-  *    0.55→0.30 s, d06 0.47→0.29 s, and won on every pinned query),
-  *    and on a cluster a lost block recomputes from the parquet scan
-  *    instead of failing the job.
-  *    Callers create pins per query invocation without unpersisting;
-  *    identical plans dedup in the cache manager, so a long-lived
-  *    session holds one entry per distinct pinned subtree.
-  *  - `localCheckpoint`: eager, truncates lineage, non-replicated
-  *    executor-local blocks. The engine's own loops truncate their
-  *    round state this way through [[round]], whatever the mode.
-  *  - `none`: no pin (the subtree recomputes per consumer; useful for
-  *    measuring what a pin is worth).
+  * A pin is a lazy MEMORY_AND_DISK persist with lineage kept: no eager
+  * job barrier (measured: an eager localCheckpoint barrier cost
+  * 0.15–0.25 s PER PIN at sf0.1; persist cut d03 0.55→0.30 s, d06
+  * 0.47→0.29 s, and won on every pinned query), and on a cluster a
+  * lost block recomputes from the parquet scan instead of failing the
+  * job. Callers create pins per query invocation without unpersisting;
+  * identical plans dedup in the cache manager, so a long-lived session
+  * holds one entry per distinct pinned subtree. The engine's own loops
+  * truncate their round state with a localCheckpoint instead, through
+  * [[round]].
   */
 object Pin {
-  val Key = "spark.graft.pin"
-
-  /** Estimated-bytes ceiling above which a persist-mode pin is
+  /** Estimated-bytes ceiling above which a [[sized]] pin is
     * SKIPPED (VERDICT r11 ask #5): a corpus-grain pin at the 100 TB
     * design point would persist ~the whole projected corpus to
     * executor storage to save re-scans that a columnar parquet read
@@ -44,11 +37,7 @@ object Pin {
   val MaxEstBytesDefault: BigInt = BigInt(64L << 30) // 64 GiB
 
   def apply(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption(Key).getOrElse("persist") match {
-      case "localCheckpoint" => df.localCheckpoint(true)
-      case "none" => df
-      case _ => df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    df.persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Size-gated [[apply]] for SCAN-DERIVED pins (projections /
     * narrow derivations of one table scan), whose Catalyst size
@@ -57,26 +46,21 @@ object Pin {
     * estimates compound multiplicatively (a pair self-join at sf0.01
     * estimates 2.3e17 B for a ~5 MB result — measured) and would skip
     * exactly the pins that matter. `tag` names the pin in the skip
-    * log so a disengaged pin is attributable from any run's stderr. */
-  def sized(df: DataFrame, tag: String): DataFrame =
-    df.sparkSession.conf.getOption(Key).getOrElse("persist") match {
-      case "localCheckpoint" => df.localCheckpoint(true)
-      case "none" => df
-      case _ =>
-        val max = df.sparkSession.conf.getOption(MaxEstBytesKey)
-          .map(BigInt(_)).getOrElse(MaxEstBytesDefault)
-        val est =
-          try df.queryExecution.optimizedPlan.stats.sizeInBytes
-          catch { case scala.util.control.NonFatal(_) => BigInt(-1) }
-        if (est > max) {
-          System.err.println(s"[pin] $tag skipped: estimated $est B > " +
-            s"$max B ceiling (set $MaxEstBytesKey to adjust)")
-          df
-        } else df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    * log so a disengaged pin is attributable from any run's stderr.
+    * The estimate covers the relation the query then scans, so a
+    * failed estimate is the query's own failure, raised early. */
+  def sized(df: DataFrame, tag: String): DataFrame = {
+    val max = df.sparkSession.conf.getOption(MaxEstBytesKey)
+      .map(BigInt(_)).getOrElse(MaxEstBytesDefault)
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est > max) {
+      System.err.println(s"[pin] $tag skipped: estimated $est B > " +
+        s"$max B ceiling (set $MaxEstBytesKey to adjust)")
+      df
+    } else apply(df)
+  }
 
-  /** Drop a pin's cache entry (no-op under `localCheckpoint`/`none` —
-    * checkpointed frames never register with the cache manager). */
+  /** Drop a pin's cache entry. */
   def release(df: DataFrame): Unit = df.unpersist(blocking = false)
 
   /** One round of an iterative driver (connected components, the
@@ -130,17 +114,15 @@ object Par {
     * lower end follows the data, the upper end bounds task explosion
     * on any one box (4× leaves AQE room to coalesce, never to fan
     * out). Filesystem stat, not a job — ~ms, resolved per invocation
-    * so a growing table re-derives its width. */
+    * so a growing table re-derives its width. It stats the file the
+    * query then scans, so a missing table throws here. */
   def forInput(s: org.apache.spark.sql.SparkSession, dir: String,
       table: String): Int = {
     val bpp = s.conf.getOption(BytesPerPartKey).map(_.toLong)
       .getOrElse(BytesPerPartDefault)
-    val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(dir, s"$table.parquet")
-        p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-      } catch { case scala.util.control.NonFatal(_) => 0L }
+    val p = new org.apache.hadoop.fs.Path(dir, s"$table.parquet")
+    val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
     val byData = math.max(1L, (bytes + bpp - 1) / bpp)
     val cap = math.max(1, 4 * s.sparkContext.defaultParallelism)
     math.min(byData, cap.toLong).toInt

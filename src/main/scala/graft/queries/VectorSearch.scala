@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{Fns, VectorExprs}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -248,8 +248,11 @@ object VectorSearch {
       .orderBy(col("cosine").desc, col("neighbor_id"))
     // the bucket key makes this a plain equi-join: no forced
     // broadcast — the query side grows with the corpus (1 in 50), so
-    // the optimizer must be free to shuffle on bucket at scale
-    eb.join(q,
+    // the optimizer must be free to shuffle on bucket at scale. The
+    // corpus side is never broadcast: both sides read the eFrame pin,
+    // and on a cold pin AQE would otherwise broadcast whichever side's
+    // cache stage finished first (TextDedup.minhashPairs' race)
+    GraftColumnBridge.noBroadcast(eb).join(q,
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         col("q_bucket").as("bucket"),
@@ -2141,8 +2144,12 @@ object VectorSearch {
       val labelCond =
         if (sameLabel) col("label_a") === col("label_b")
         else col("label_a") =!= col("label_b")
-      n.select(col("vec_id").as("vec_id_a"), col("label").as("label_a"),
-          col("cell"), col("sx").as("sx_a"), col("nn").as("nn_a"))
+      // the left input is never broadcast: both inputs read the `n`
+      // pin, and on a cold pin AQE would otherwise broadcast whichever
+      // side's cache stage finished first
+      GraftColumnBridge.noBroadcast(n.select(col("vec_id").as("vec_id_a"),
+          col("label").as("label_a"), col("cell"), col("sx").as("sx_a"),
+          col("nn").as("nn_a")))
         .join(n.select(col("vec_id").as("vec_id_b"),
           col("label").as("label_b"), col("cell"),
           col("sx").as("sx_b"), col("nn").as("nn_b")), Seq("cell"))

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, NO_BROADCAST_HASH, ResolvedHint}
 
@@ -24,6 +25,10 @@ object GraftColumnBridge {
       case lr: execution.LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** Block until every listener event posted so far is delivered
+    * (`LiveListenerBus.waitUntilEmpty` is `private[spark]`). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** `df` as a join input that is never broadcast: Catalyst's
     * `NO_BROADCAST_HASH` strategy hint (the one AQE itself puts on a

@@ -12,7 +12,7 @@ class CodegenCacheSpec extends SparkTestBase {
   private val dir = "/root/testdata/sf0.001"
 
   test("a second round of the same registered queries compiles no class") {
-    val picked = Seq("q01", "q09", "e05", "d02", "v09").map(id =>
+    val picked = Seq("q01", "q09", "e05", "d02", "v03", "v09", "v20").map(id =>
       SparkEntry.registry.find(_.name.startsWith(id + "_"))
         .getOrElse(fail(s"no registered query $id")))
     def round(): Long = {

@@ -1,39 +1,18 @@
 package graft
 
-import graft.operators.Pin
-import graft.queries.TextDedup
-import org.apache.spark.sql.Row
+import graft.operators.{Par, Pin}
 
-/** The `spark.graft.pin` knob trades local-mode speed
-  * (localCheckpoint) against cluster fault tolerance (persist with
-  * lineage kept) — results must be identical in every mode, for both
-  * a fan-out consumer (d02) and an iterative one (BFS reachability).
-  */
+/** A pin is a MEMORY_AND_DISK persist behind a size gate; the gate and
+  * the partition-width stat read the files the query then scans, so
+  * they never hide a missing table behind a fallback. */
 class PinSpec extends SparkTestBase {
-  import spark.implicits._
-
   private val sf = "/root/testdata/sf0.001"
 
-  private def withMode[A](mode: String)(body: => A): A = {
-    val prev = spark.conf.getOption(Pin.Key)
-    spark.conf.set(Pin.Key, mode)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(Pin.Key, v)
-      case None => spark.conf.unset(Pin.Key)
+  test("Par.forInput on a missing table throws instead of using width 1") {
+    assert(Par.forInput(spark, sf, "documents") >= 1)
+    intercept[java.io.FileNotFoundException] {
+      Par.forInput(spark, sf, "no_such_table")
     }
-  }
-
-  private def run(mode: String): Seq[Row] = withMode(mode) {
-    TextDedup.d02.run(spark, sf)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-  }
-
-  test("d02 results identical across pin modes") {
-    val base = run("localCheckpoint")
-    assert(base.nonEmpty)
-    assert(run("persist") === base)
-    assert(run("none") === base)
   }
 
   test("size gate: an over-ceiling pin is skipped (no InMemoryRelation" +
