@@ -5,7 +5,9 @@ import org.apache.spark.sql.execution.FormattedMode
 /** Plan inspection harness: prints the formatted physical plan of
   * selected registry queries so scan pruning (ReadSchema), filter
   * pushdown (PushedFilters), join strategies and shuffle counts can be
-  * audited. Not part of the driver contract. */
+  * audited. Expression ids (`#123L`) print as `#` and exchange ids
+  * (`plan_id=45`) as `plan_id=`, so the dumps of two commits diff line
+  * for line. Not part of the driver contract. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -17,9 +19,9 @@ object PlanAudit {
       .filter(q => names.isEmpty || names.contains(q.name))
       .foreach { q =>
         println(s"\n===== ${q.name} =====")
-        val plan = q.run(spark, dir).queryExecution
+        println(q.run(spark, dir).queryExecution
           .explainString(FormattedMode)
-        println(plan)
+          .replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id="))
       }
     spark.stop()
   }

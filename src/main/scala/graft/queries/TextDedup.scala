@@ -123,6 +123,25 @@ object TextDedup {
         greatest(lit(MinDfCap), col("rawcap"))).as("cap"))
   }
 
+  /** The pre-cap pinned inverted index: [[gids]](distinct = true)
+    * repartitioned by gid. Shared by [[cappedGids]] (which builds the
+    * hot-gram filter on top) and d16's tier count — both construct
+    * the identical plan, so the cache manager serves one entry. */
+  private[graft] def pinnedGids(s: SparkSession, dir: String): DataFrame = {
+    val par = Par.forInput(s, dir, "documents")
+    Pin(gids(s, dir, distinct = true)
+      .repartition(par, col("gid")))
+  }
+
+  /** Docs eligible for shingle-grain dedup = docs with ≥3 tokens =
+    * distinct doc_ids in [[pinnedGids]] (a ≥3-token doc has ≥1
+    * shingle; explode drops empty arrays). Counting off the pin means
+    * the tier decision's scalar costs a cache fill that every
+    * downstream detector reuses — NOT an extra corpus scan. */
+  private[graft] def eligibleDocCount(s: SparkSession, dir: String): Long =
+    pinnedGids(s, dir).agg(countDistinct(col("doc_id")))
+      .head().getLong(0)
+
   /** The pinned, df-capped, gid-PRE-PARTITIONED distinct-gram relation
     * `(doc_id, gid)` shared by d02 and s06 (ONE definition → identical
     * plans → the persist cache manager dedups, so in a long-lived
@@ -144,25 +163,6 @@ object TextDedup {
     * broadcast (the t10 corpus-total pattern) — deriving it adds
     * df-histogram-grain work only, never a corpus-grain pass beyond
     * the df agg the hot list already paid. */
-  /** The pre-cap pinned inverted index: [[gids]](distinct = true)
-    * repartitioned by gid. Shared by [[cappedGids]] (which builds the
-    * hot-gram filter on top) and d16's tier count — both construct
-    * the identical plan, so the cache manager serves one entry. */
-  private[graft] def pinnedGids(s: SparkSession, dir: String): DataFrame = {
-    val par = Par.forInput(s, dir, "documents")
-    Pin(gids(s, dir, distinct = true)
-      .repartition(par, col("gid")))
-  }
-
-  /** Docs eligible for shingle-grain dedup = docs with ≥3 tokens =
-    * distinct doc_ids in [[pinnedGids]] (a ≥3-token doc has ≥1
-    * shingle; explode drops empty arrays). Counting off the pin means
-    * the tier decision's scalar costs a cache fill that every
-    * downstream detector reuses — NOT an extra corpus scan. */
-  private[graft] def eligibleDocCount(s: SparkSession, dir: String): Long =
-    pinnedGids(s, dir).agg(countDistinct(col("doc_id")))
-      .head().getLong(0)
-
   private[queries] def cappedGids(
       s: SparkSession, dir: String): DataFrame = {
     val g = pinnedGids(s, dir)
@@ -186,6 +186,34 @@ object TextDedup {
       .withColumn("n",
         count(lit(1)).over(Window.partitionBy("doc_id")))
       .repartition(par, col("gid")))
+  }
+
+  /** The one pair-intersection aggregate: per candidate pair
+    * `(doc_a, doc_b)` over gram-matched `(…, na, nb)` rows, |∩| as
+    * `inter` plus both docs' gram counts (pairs are size-functional,
+    * so `max` only carries them through). */
+  private def interAgg(matched: DataFrame): DataFrame =
+    matched.groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("inter"),
+        max("na").as("na"), max("nb").as("nb"))
+
+  /** Inverted-index pair generation over [[sizedGids]] (d02, d15 and
+    * d16's exact tier): the gid self-join, exchange-free off the
+    * gid-partitioned pin, keeps `doc_a < doc_b`, applies `prune` to
+    * the matched rows and repartitions them by pair before
+    * [[interAgg]]. Candidate pairs ≈ unique groups (little map-side
+    * reduction), so the pair aggregation is the widest stage; the
+    * parallelism floor keeps it off one core when AQE coalesces the
+    * small shuffle (no-op at scale, where the exchange is ≥ the
+    * advisory size on its own). */
+  private def gramPairCounts(s: SparkSession, dir: String,
+      prune: DataFrame => DataFrame = identity): DataFrame = {
+    val par = Par.forInput(s, dir, "documents")
+    val hn = sizedGids(s, dir)
+    interAgg(prune(hn.toDF("doc_a", "gid", "na")
+        .join(hn.toDF("doc_b", "gid", "nb"), "gid")
+        .filter(col("doc_a") < col("doc_b")))
+      .repartition(par, col("doc_a"), col("doc_b")))
   }
 
   // ---------------------------------------------------------------
@@ -215,9 +243,8 @@ object TextDedup {
   // the 60-bit gram hash, not the gram text: the self-join shuffles
   // 8-byte longs instead of ~25-byte strings (both engines hash with
   // the same md5 prefix, so any collision collapses identically on
-  // both sides). Hub shingles would skew the self-join at scale → a
-  // prefix-filter or document-frequency cap slots in on the `h`
-  // relation without changing shape.
+  // both sides). Hub shingles would skew the self-join at scale, so
+  // the self-join reads [[cappedGids]]' df-capped grams.
   val d02 = Q(
     "d02_ngram_jaccard",
     s"""$gidsCte,
@@ -244,31 +271,18 @@ object TextDedup {
       // each consumer re-runs the shingle pass and the anti-join —
       // the plan audit showed 4× the df-cap shuffle, which dominated
       // d02's data path. Its gid pre-partitioning makes the self-join
-      // below exchange-free.
-      val par = Par.forInput(s, dir, "documents")
-      val hn = sizedGids(s, dir)
-      // candidate pairs ≈ unique groups (little map-side reduction), so
-      // the pair aggregation is the widest stage of the query. The
-      // size filter runs BEFORE that shuffle: J ≥ t forces
+      // exchange-free.
+      //
+      // The size filter runs BEFORE the pair shuffle: J ≥ t forces
       // min(na,nb) ≥ t·max(na,nb) (inter ≤ min and
       // inter ≥ t·(na+nb−inter) combine to it), so violating
       // candidates — ~40 % of rows on the Heaps-law scale corpus —
       // are dropped in the map stage with output-identical semantics.
-      // Carrying n through the agg (pairs are size-functional) also
-      // removes the two PAIR-grain size joins the old plan paid; at
-      // corpus scale those stop broadcasting and would sort-merge the
-      // 100M-row pair set twice. The parallelism floor keeps the agg
-      // off one core when AQE coalesces the small shuffle (no-op at
-      // scale, where the exchange is ≥ the advisory size on its own).
-      hn.toDF("doc_a", "gid", "na")
-        .join(hn.toDF("doc_b", "gid", "nb"), "gid")
-        .filter(col("doc_a") < col("doc_b"))
-        .filter(least(col("na"), col("nb")) >=
-          lit(JaccardMin) * greatest(col("na"), col("nb")))
-        .repartition(par, col("doc_a"), col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("inter"),
-          max("na").as("na"), max("nb").as("nb"))
+      // Carrying n through the agg also removes the two PAIR-grain
+      // size joins the old plan paid; at corpus scale those stop
+      // broadcasting and would sort-merge the 100M-row pair set twice.
+      gramPairCounts(s, dir, _.filter(least(col("na"), col("nb")) >=
+          lit(JaccardMin) * greatest(col("na"), col("nb"))))
         .withColumn("union_size", col("na") + col("nb") - col("inter"))
         .withColumn("jaccard",
           col("inter").cast(DoubleType) / col("union_size"))
@@ -308,8 +322,6 @@ object TextDedup {
     .map(b => s"(a.m${2 * b}=b.m${2 * b} AND a.m${2 * b + 1}=b.m${2 * b + 1})")
     .mkString("(", " OR ", ")")
 
-  /** d03's frame: banded candidate pairs + minhash-agreement estimate
-    * (also the edge generator for d07's cluster assignment). */
   /** The 8 MinHash (a, b) mixing pairs — ONE Scala definition shared
     * by [[minhashPairs]] and the streaming intake twin
     * ([[graft.streaming.IngestDedup.nearDupBands]]); `mhSigCte` above
@@ -323,6 +335,8 @@ object TextDedup {
     167772161L -> 97531L, 1224736769L -> 24680L,
     1051721729L -> 86420L, 1107296257L -> 11111L)
 
+  /** d03's frame: banded candidate pairs + minhash-agreement estimate
+    * (also the edge generator for d07's cluster assignment). */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
       val h = gids(s, dir, distinct = false)
         .select(col("doc_id"), (col("gid") % 2147483647L).as("x"))
@@ -538,59 +552,79 @@ object TextDedup {
   // around 10^5 docs (measured: d04's steady state went 2.9 s at 50k
   // docs → 151 s at 500k on the Heaps-law corpus, pure bucket-pair
   // algebra), while 15-bit pieces (32k buckets) keep the same corpus
-  // at ~7.7 docs/bucket. d12 is the fixed 60/15 configuration; d04
-  // (below) AUTO-DERIVES its width from the corpus size.
-  private def simhashQ(name: String, bits: Int): Q = {
-    val nPieces = 4
-    val pw = bits / nPieces // piece width in bits
-    require(pw * nPieces == bits, s"$bits bits must split into $nPieces")
-    val mask = (1L << bits) - 1
-    Q(name,
-      s"""$gidsCte,
-        |hh AS (SELECT doc_id, (gid & $mask) AS h FROM g),
-        |bs AS (SELECT doc_id,
-        |${(0 until bits).map(b => s"         SUM(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS s$b").mkString(",\n")}
-        |       FROM hh GROUP BY doc_id),
-        |sim AS (SELECT doc_id, CAST(
-        |${(0 until bits).map(b => s"         (CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" +\n")}
-        |         AS BIGINT) AS simhash
-        |        FROM bs)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-        |FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin) {
-      (s, dir) =>
-        val hh = gids(s, dir, distinct = true)
-          .select(col("doc_id"),
-            col("gid").bitwiseAND(lit(mask)).as("h"))
-        val bitSums = (0 until bits).map(b =>
-          sum(when(expr(s"shiftright(h, $b) & 1") === 1, 1).otherwise(-1))
-            .as(s"s$b"))
-        val assemble = (0 until bits)
-          .map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
-          .reduce(_ + _)
-        val sim = Pin(hh // feeds both sides of the piece join
-          .groupBy("doc_id")
-          .agg(bitSums.head, bitSums.tail: _*)
-          .select(col("doc_id"), assemble.as("simhash")))
-        // pigeonhole: hamming<=3 over 4 pieces => >=1 piece identical
-        val pieces = sim
-          .withColumn("p", explode(sequence(lit(0), lit(nPieces - 1))))
-          .select(col("doc_id"), col("simhash"), col("p"),
-            expr(s"(simhash div shiftleft(1L, p*$pw)) % ${1L << pw}")
-              .as("piece"))
-        val cand = pieces.toDF("doc_a", "sim_a", "p", "piece")
-          .join(pieces.toDF("doc_b", "sim_b", "p", "piece"),
-            Seq("p", "piece"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b", "sim_a", "sim_b")
-          .distinct()
-        cand
-          .withColumn("hamming",
-            expr("CAST(bit_count(sim_a ^ sim_b) AS INT)"))
-          .filter(col("hamming") <= 3)
-          .select("doc_a", "doc_b", "hamming")
-    }
+  // at ~7.7 docs/bucket. d04 (below) AUTO-DERIVES its width from the
+  // corpus size; d12 is the fixed 60/15 configuration. Both read one
+  // signature pin ([[simhashSig]]) and one pair builder
+  // ([[simhashPairs]]), differing only in the two moduli.
+
+  /** Oracle fragment: the 60 per-bit Charikar sums `s0..s59` over the
+    * BIGINT column `v` (+1 where bit b is set, −1 where it is not). */
+  private def simhashSumsSql(v: String): String = (0 until 60)
+    .map(b => s"SUM(CASE WHEN ($v >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS s$b")
+    .mkString(",\n")
+
+  /** Oracle fragment: the 60-bit fingerprint assembled from the signs
+    * of `s0..s59`. */
+  private val simhashAssembleSql: String = (0 until 60)
+    .map(b => s"(CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END)")
+    .mkString(" +\n")
+
+  /** Oracle tail: the verified pairs over a `(doc_id, simhash)` CTE. */
+  private def simhashPairsSql(rel: String): String =
+    s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+      |FROM $rel a JOIN $rel b ON a.doc_id < b.doc_id
+      |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin
+
+  /** The full 60-bit Charikar fingerprint `sh` per doc over the
+    * distinct gram hashes, pinned: it feeds d04's width-derivation
+    * count and both piece-join sides, and d04, d12 and d16 build the
+    * identical plan, so one cache entry serves all three. */
+  private def simhashSig(s: SparkSession, dir: String): DataFrame = {
+    val hh = gids(s, dir, distinct = true)
+      .select(col("doc_id"), col("gid").as("h"))
+    val bitSums = (0 until 60).map(b =>
+      sum(when(expr(s"shiftright(h, $b) & 1") === 1, 1).otherwise(-1))
+        .as(s"s$b"))
+    val assemble = (0 until 60)
+      .map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
+      .reduce(_ + _)
+    Pin(hh
+      .groupBy("doc_id")
+      .agg(bitSums.head, bitSums.tail: _*)
+      .select(col("doc_id"), assemble.as("sh")))
+  }
+
+  /** Pigeonhole piece join + hamming verification over [[simhashSig]]:
+    * the effective fingerprint is `sh % w2` (w2 = 2^(4·pw)) and its
+    * four pieces are base-`p2` digits (p2 = 2^pw). Bit b of the 60-bit
+    * fingerprint equals bit b of the fingerprint built from the gram
+    * hashes masked to W bits, for b < W (each per-bit sum only reads
+    * bit b of the gram hash), so `sh % 2^W` IS the W-bit fingerprint.
+    * Both moduli are literals, so the two piece-join sides are
+    * identical subtrees and share one exchange. */
+  private def simhashPairs(sig: DataFrame, p2: Long, w2: Long): DataFrame = {
+    val eff = sig.select(col("doc_id"), (col("sh") % lit(w2)).as("simhash"))
+    // pigeonhole: hamming<=3 over 4 pieces => >=1 piece identical
+    // (p2 ≤ 2^15, so p2^3 < 2^46 and the div chain stays in BIGINT)
+    val pieces = eff.select(col("doc_id"), col("simhash"),
+      posexplode(array(
+        expr(s"simhash % ${p2}L"),
+        expr(s"(simhash div ${p2}L) % ${p2}L"),
+        expr(s"(simhash div ${p2 * p2}L) % ${p2}L"),
+        expr(s"(simhash div ${p2 * p2 * p2}L) % ${p2}L")))
+        .as(Seq("p", "piece")))
+    val cand = pieces.toDF("doc_a", "sim_a", "p", "piece")
+      .join(pieces.toDF("doc_b", "sim_b", "p", "piece"),
+        Seq("p", "piece"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b", "sim_a", "sim_b")
+      .distinct()
+    cand
+      .withColumn("hamming",
+        expr("CAST(bit_count(sim_a ^ sim_b) AS INT)"))
+      .filter(col("hamming") <= 3)
+      .select("doc_a", "doc_b", "hamming")
   }
 
   /** Target docs per SimHash piece bucket for [[d04]]'s width
@@ -601,13 +635,15 @@ object TextDedup {
     * Heaps corpus pw = 15 → the d12 configuration. */
   private[queries] val SimhashBucketTarget = 24L
 
+  /** [[d04]]'s width indicators' thresholds T·2^(j−1), j = 9..15. */
+  private val SimhashThresholds =
+    (9 to 15).map(j => SimhashBucketTarget * (1L << (j - 1)))
+
   /** Oracle fragment: 2^(4·pw) = 2^32·Π(1+15·[nd>T·2^(j−1)]) over a
     * CTE `tot(nd)` in scope — the exact-integer width derivation
     * shared by [[d04]]'s oracle and d16's inline simhash member. */
-  private[queries] val simhashW2Sql: String =
-    "4294967296" + (9 to 15).map(j =>
-      s" * (1 + 15*(tot.nd > ${SimhashBucketTarget * (1L << (j - 1))})" +
-        "::BIGINT)").mkString
+  private[queries] val simhashW2Sql: String = "4294967296" +
+    SimhashThresholds.map(t => s" * (1 + 15*(tot.nd > $t)::BIGINT)").mkString
 
   /** d04 with the v20 auto-width contract (VERDICT r8 ask #1): the
     * FULL 60-bit Charikar fingerprint is always aggregated, and the
@@ -615,96 +651,63 @@ object TextDedup {
     * from the corpus size by exact integer comparisons mirrored in
     * the oracle — 2^pw = 256·Π(1+[N>T·2^(j−1)]) and
     * 2^(4·pw) = 2^32·Π(1+15·[N>T·2^(j−1)]) — so Spark and DuckDB
-    * derive the identical width at every scale (no float log2). Bit b
-    * of the 60-bit fingerprint equals bit b of the masked-input
-    * fingerprint for b < W (the per-bit sums only read bit b of the
-    * gram hash), so `simhash60 % 2^W` IS the W-bit fingerprint the
-    * fixed-width construction computes: at pw = 8 the output is
-    * bit-identical to the historical 32-bit d04, and at pw = 15 it
-    * converges to d12. Fixes the measured 256-bucket saturation
-    * (151 s at 500k docs) without a manual tier swap. */
-  private def simhashAutoQ(name: String): Q = {
-    val bits = 60
-    val w2Sql = simhashW2Sql
-    Q(name,
-      s"""$gidsCte,
-        |bs AS (SELECT doc_id,
-        |${(0 until bits).map(b => s"         SUM(CASE WHEN (gid >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS s$b").mkString(",\n")}
-        |       FROM g GROUP BY doc_id),
-        |sim AS (SELECT doc_id, CAST(
-        |${(0 until bits).map(b => s"         (CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" +\n")}
-        |         AS BIGINT) AS sh
-        |        FROM bs),
-        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM sim),
-        |eff AS (SELECT doc_id, sh % (SELECT $w2Sql FROM tot) AS simhash
-        |        FROM sim)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-        |FROM eff a JOIN eff b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin) {
-      (s, dir) =>
-        val hh = gids(s, dir, distinct = true)
-          .select(col("doc_id"), col("gid").as("h"))
-        val bitSums = (0 until bits).map(b =>
-          sum(when(expr(s"shiftright(h, $b) & 1") === 1, 1).otherwise(-1))
-            .as(s"s$b"))
-        val assemble = (0 until bits)
-          .map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
-          .reduce(_ + _)
-        // feeds the width-derivation count AND both piece-join sides
-        val sim = Pin(hh
-          .groupBy("doc_id")
-          .agg(bitSums.head, bitSums.tail: _*)
-          .select(col("doc_id"), assemble.as("sh")))
-        // width derivation as ONE driver-side scalar sync off the pin
-        // (the d16/d14 plan-time precedent) — the same exact-integer
-        // indicator algebra as the oracle's p2Sql/w2Sql, but yielding
-        // LITERAL divisors: with the derivation in-plan (a 1-row agg
-        // crossJoined ABOVE the pin) the two piece-join sides were no
-        // longer identical subtrees, defeating exchange reuse — each
-        // bench rep shuffled the pieces twice and d04 ran 2.4× d12's
-        // steady state at Heaps-100× despite deriving d12's exact
-        // configuration. Literals restore d12's plan shape (one
-        // reused exchange, constant-folded piece math).
-        val nd = sim.count()
-        val indL = (9 to 15).map(j =>
-          if (nd > SimhashBucketTarget * (1L << (j - 1))) 1L else 0L)
-        val p2 = indL.foldLeft(256L)((acc, i) => acc * (1L + i))
-        val w2 = indL.foldLeft(4294967296L)((acc, i) =>
-          acc * (1L + 15L * i))
-        val eff = sim.select(col("doc_id"),
-          (col("sh") % lit(w2)).as("simhash"))
-        // pigeonhole: hamming<=3 over 4 pieces => >=1 piece identical
-        // (p2 = 2^pw, p2^3 < 2^46 so the div chain stays in BIGINT)
-        val pieces = eff.select(col("doc_id"), col("simhash"),
-          posexplode(array(
-            expr(s"simhash % ${p2}L"),
-            expr(s"(simhash div ${p2}L) % ${p2}L"),
-            expr(s"(simhash div ${p2 * p2}L) % ${p2}L"),
-            expr(s"(simhash div ${p2 * p2 * p2}L) % ${p2}L")))
-            .as(Seq("p", "piece")))
-        val cand = pieces.toDF("doc_a", "sim_a", "p", "piece")
-          .join(pieces.toDF("doc_b", "sim_b", "p", "piece"),
-            Seq("p", "piece"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b", "sim_a", "sim_b")
-          .distinct()
-        cand
-          .withColumn("hamming",
-            expr("CAST(bit_count(sim_a ^ sim_b) AS INT)"))
-          .filter(col("hamming") <= 3)
-          .select("doc_a", "doc_b", "hamming")
-    }
+    * derive the identical width at every scale (no float log2). At
+    * pw = 8 the output is bit-identical to the historical 32-bit d04,
+    * and at pw = 15 it converges to d12. Fixes the measured
+    * 256-bucket saturation (151 s at 500k docs) without a manual tier
+    * swap. */
+  val d04 = Q(
+    "d04_simhash",
+    s"""$gidsCte,
+      |bs AS (SELECT doc_id,
+      |${simhashSumsSql("gid")}
+      |       FROM g GROUP BY doc_id),
+      |sim AS (SELECT doc_id, CAST(
+      |$simhashAssembleSql
+      |         AS BIGINT) AS sh
+      |        FROM bs),
+      |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM sim),
+      |eff AS (SELECT doc_id, sh % (SELECT $simhashW2Sql FROM tot) AS simhash
+      |        FROM sim)
+      |${simhashPairsSql("eff")}""".stripMargin) { (s, dir) =>
+    val sig = simhashSig(s, dir)
+    // width derivation as ONE driver-side scalar sync off the pin
+    // (the d16/d14 plan-time precedent) — the same exact-integer
+    // indicator algebra as the oracle's w2Sql, but yielding LITERAL
+    // moduli: with the derivation in-plan (a 1-row agg crossJoined
+    // ABOVE the pin) the two piece-join sides were no longer
+    // identical subtrees, defeating exchange reuse — each bench rep
+    // shuffled the pieces twice and d04 ran 2.4× d12's steady state
+    // at Heaps-100× despite deriving d12's exact configuration.
+    val nd = sig.count()
+    val indL = SimhashThresholds.map(t => if (nd > t) 1L else 0L)
+    val p2 = indL.foldLeft(256L)((acc, i) => acc * (1L + i))
+    val w2 = indL.foldLeft(4294967296L)((acc, i) =>
+      acc * (1L + 15L * i))
+    simhashPairs(sig, p2, w2)
   }
-
-  val d04 = simhashAutoQ("d04_simhash")
 
   // d12 — the fixed wide configuration kept as the documented contrast
   // tier: the full 60-bit shingle hash, 4×15-bit pieces (32k buckets
   // each). Hamming ≤ 3 over 60 bits is a TIGHTER near-dup criterion
   // than over 32, so d12 is the high-precision tier; d04's auto-width
   // derivation converges to exactly this configuration at ≥394k docs.
-  val d12 = simhashQ("d12_simhash_wide", 60)
+  // The oracle's 60-bit mask is the identity on the 60-bit gram hash,
+  // so d12 reads d04's signature pin unchanged.
+  val d12 = Q(
+    "d12_simhash_wide",
+    s"""$gidsCte,
+      |hh AS (SELECT doc_id, (gid & ${(1L << 60) - 1}) AS h FROM g),
+      |bs AS (SELECT doc_id,
+      |${simhashSumsSql("h")}
+      |       FROM hh GROUP BY doc_id),
+      |sim AS (SELECT doc_id, CAST(
+      |$simhashAssembleSql
+      |         AS BIGINT) AS simhash
+      |        FROM bs)
+      |${simhashPairsSql("sim")}""".stripMargin) { (s, dir) =>
+    simhashPairs(simhashSig(s, dir), 1L << 15, 1L << 60)
+  }
 
   // ---------------------------------------------------------------
   // d05 winnowing fingerprint — per-doc rolling fingerprint = min
@@ -732,14 +735,13 @@ object TextDedup {
   // ---------------------------------------------------------------
   // d06 embedding-cosine near-dup — exact integer cosine within
   // (label, coarse-cell) blocks. The cell is an IVF-style orthant
-  // code: the sign pattern of [[D06CellBits]] embedding dims, two
-  // bands OR'd LSH-style for recall (a pair is a candidate if it
-  // agrees on EITHER band's cell). Each band is a plain equi-join on
+  // code: the sign pattern of `bits` embedding dims, two bands OR'd
+  // LSH-style for recall (a pair is a candidate if it agrees on
+  // EITHER band's cell). Each band is a plain equi-join on
   // (label, cell): block size is bounded by corpus/(labels·2^bits)
   // instead of corpus/labels — the bare-label key was O(N) per block
-  // and within-block pairing went quadratic at scale. At 100 TB you
-  // widen D06CellBits (same plan, finer cells), exactly like d04's
-  // widen-to-64-bit note. Vectors pre-scaled to BIGINT once
+  // and within-block pairing went quadratic at scale. Vectors
+  // pre-scaled to BIGINT once
   // ([[graft.functions.Fns.scaleVec]]); signs are taken on the scaled
   // ints so both engines see identical cells; pair loop is pure
   // integer multiply-add. CELL WIDTH is the scale knob (same algebra
@@ -777,44 +779,57 @@ object TextDedup {
         lit(1 << i)).otherwise(lit(0)))
       .reduce(_ + _)
 
-  private def embNearDupQ(name: String, bits: Int): Q = Q(
-    name,
+  /** Oracle text shared by d06 and d13: scaled vectors `e`, any extra
+    * CTEs (`ctes`, each ending in a comma), then `n` over `from` with
+    * the squared norm and the two band cells (SQL over `sx`), then
+    * the exact-cosine pairs that agree on either band's cell. */
+  private def embNearDupSql(ctes: String, c1: String, c2: String,
+      from: String): String =
     s"""WITH e AS (SELECT vec_id, label,
       |    list_transform(embedding, x -> round(x::DOUBLE*1e6)::BIGINT) AS sx
       |  FROM embeddings),
+      |$ctes
       |n AS (SELECT vec_id, label, sx,
       |  CAST(list_sum(list_transform(sx, x -> x*x)) AS BIGINT) AS nn,
-      |  ${orthantSql(1, bits)} AS c1, ${orthantSql(1 + bits, bits)} AS c2
-      |  FROM e)
+      |  $c1 AS c1,
+      |  $c2 AS c2
+      |  FROM $from)
       |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
       |  CAST(list_sum(list_transform(list_zip(a.sx, b.sx),
       |    x -> x[1]*x[2])) AS BIGINT)::DOUBLE
       |    / (sqrt(a.nn::DOUBLE) * sqrt(b.nn::DOUBLE)) AS cosine
       |FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
       |  AND (a.c1 = b.c1 OR a.c2 = b.c2)
-      |WHERE cosine >= 0.3""".stripMargin) { (s, dir) =>
-    // fans out six ways (both sides of two band joins + the two
-    // verification sides): pin so scaleVec+norm+orthant runs once
-    val e = Pin(Tables.load(s, dir, "embeddings")
+      |WHERE cosine >= 0.3""".stripMargin
+
+  /** `(vec_id, label, sx, nn)`: vectors scaled to BIGINT once
+    * ([[graft.functions.Fns.scaleVec]]) with their integer squared
+    * norm — the head of d06's and d13's pinned band relations. */
+  private def scaledEmbeddings(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         Fns.scaleVec(col("embedding")).as("sx"))
       .withColumn("nn", VectorExprs.normSqIntNative(col("sx")))
-      .withColumn("c1", orthantCol(1, bits))
-      .withColumn("c2", orthantCol(1 + bits, bits)))
-    // one equi-join per band (the OR in the oracle's join condition
-    // would force a non-equi join in Spark; union-distinct of per-band
-    // equi-joins is the same set — d03's band pattern), with the exact
-    // cosine computed INSIDE the band join. The join sides are the
-    // full (compact) vector rows — N rows per side, not candidates —
-    // so the only shuffles are the two band-key exchanges of the
-    // corpus itself; the candidate blow-up exists solely as the join's
-    // streamed output, consumed by the cosine filter in the same
-    // stage. The previous shape (distinct candidate ids, then re-join
-    // both signature arrays) shuffled the CANDIDATE set three times —
-    // 27 M rows at the 500k-vector scale run vs 2×500k here. A pair
-    // agreeing on both bands computes its cosine twice (bounded 2×
-    // compute); the final distinct dedups it exactly because the
-    // expression is deterministic integer arithmetic.
+
+  /** The band-join + exact-cosine + distinct builder of d06 and d13,
+    * over a pinned `(vec_id, label, sx, nn, c1, c2)` relation (pinned
+    * because it fans out four ways: both sides of two band joins).
+    *
+    * One equi-join per band (the OR in the oracle's join condition
+    * would force a non-equi join in Spark; union-distinct of per-band
+    * equi-joins is the same set — d03's band pattern), with the exact
+    * cosine computed INSIDE the band join. The join sides are the
+    * full (compact) vector rows — N rows per side, not candidates —
+    * so the only shuffles are the two band-key exchanges of the
+    * corpus itself; the candidate blow-up exists solely as the join's
+    * streamed output, consumed by the cosine filter in the same
+    * stage. The previous shape (distinct candidate ids, then re-join
+    * both signature arrays) shuffled the CANDIDATE set three times —
+    * 27 M rows at the 500k-vector scale run vs 2×500k here. A pair
+    * agreeing on both bands computes its cosine twice (bounded 2×
+    * compute); the final distinct dedups it exactly because the
+    * expression is deterministic integer arithmetic. */
+  private def cosineBandPairs(e: DataFrame): DataFrame = {
     val cos = Fns.cosineFromScaled(
       VectorExprs.dotIntNative(col("sx_a"), col("sx_b")),
       col("nn_a"), col("nn_b"))
@@ -851,6 +866,15 @@ object TextDedup {
     * contrast tier). */
   private[queries] val D06TargetCell = 150L
 
+  /** [[d06]]'s width indicators' thresholds T·2^(j−1), j = 5..16. */
+  private val D06Thresholds =
+    (5 to 16).map(j => D06TargetCell * (1L << (j - 1)))
+
+  /** Oracle fragment: 2^bits = 16·Π(1+[nv>T·2^(j−1)]) over a CTE
+    * `tot(nv)` in scope — [[d06]]'s exact-integer width derivation. */
+  private val d06CellsSql: String = "16" +
+    D06Thresholds.map(t => s" * (1 + (tot.nv > $t)::BIGINT)").mkString
+
   /** d06 with the v20 auto-width contract (VERDICT r8 ask #1): both
     * orthant bands are always computed at the FULL 16-bit span and
     * masked to the derived width with `% 2^bits`, where 2^bits =
@@ -873,69 +897,38 @@ object TextDedup {
     * cell-population quadratic — first at 200k vectors (15 s, fixed
     * 4-bit cells), then again at 2M when the ladder clamped at 8 bits
     * (249 s at the 1000× tier) — without a manual tier swap. */
-  private def embNearDupAutoQ(name: String): Q = {
-    val thresholds = (5 to 16).map(j => D06TargetCell * (1L << (j - 1)))
-    val b2Sql = "16" +
-      thresholds.map(t => s" * (1 + (tot.nv > $t)::BIGINT)").mkString
-    Q(name,
-      s"""WITH e AS (SELECT vec_id, label,
-        |    list_transform(embedding, x -> round(x::DOUBLE*1e6)::BIGINT) AS sx
-        |  FROM embeddings),
-        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nv FROM embeddings),
-        |n AS (SELECT vec_id, label, sx,
-        |  CAST(list_sum(list_transform(sx, x -> x*x)) AS BIGINT) AS nn,
-        |  ${orthantSql(1, 16)} % ($b2Sql) AS c1,
-        |  ${orthantSql(5, 16)} % ($b2Sql) AS c2
-        |  FROM e, tot)
-        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
-        |  CAST(list_sum(list_transform(list_zip(a.sx, b.sx),
-        |    x -> x[1]*x[2])) AS BIGINT)::DOUBLE
-        |    / (sqrt(a.nn::DOUBLE) * sqrt(b.nn::DOUBLE)) AS cosine
-        |FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-        |  AND (a.c1 = b.c1 OR a.c2 = b.c2)
-        |WHERE cosine >= 0.3""".stripMargin) { (s, dir) =>
-      // same plan as [[embNearDupQ]] (exact cosine INSIDE the band
-      // joins — see its builder comments) plus the 1-row corpus total
-      // broadcast into the pin for the width mask
-      val ind = (5 to 16).map(j =>
-        when(col("nv") > D06TargetCell * (1L << (j - 1)), 1L)
-          .otherwise(0L))
-      val tot = Tables.load(s, dir, "embeddings")
-        .agg(count(lit(1)).as("nv"))
-        .select(ind.map(i => lit(1L) + i).foldLeft(lit(16L))(_ * _)
-          .as("b2"))
-      val e = Pin(Tables.load(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"),
-          Fns.scaleVec(col("embedding")).as("sx"))
-        .withColumn("nn", VectorExprs.normSqIntNative(col("sx")))
-        .crossJoin(broadcast(tot))
-        .withColumn("c1", orthantCol(1, 16) % col("b2"))
-        .withColumn("c2", orthantCol(5, 16) % col("b2"))
-        .drop("b2"))
-      val cos = Fns.cosineFromScaled(
-        VectorExprs.dotIntNative(col("sx_a"), col("sx_b")),
-        col("nn_a"), col("nn_b"))
-      Seq("c1", "c2").map { c =>
-        e.select(col("vec_id").as("vec_a"), col("label"), col(c).as("c"),
-            col("sx").as("sx_a"), col("nn").as("nn_a"))
-          .join(e.select(col("vec_id").as("vec_b"), col("label"),
-            col(c).as("c"), col("sx").as("sx_b"), col("nn").as("nn_b")),
-            Seq("label", "c"))
-          .filter(col("vec_a") < col("vec_b"))
-          .select(col("vec_a"), col("vec_b"), col("label"),
-            cos.as("cosine"))
-          .filter(col("cosine") >= 0.3)
-      }.reduce(_ union _).distinct()
-    }
+  val d06 = Q(
+    "d06_embedding_neardup",
+    embNearDupSql(
+      "tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nv FROM embeddings),",
+      s"${orthantSql(1, 16)} % ($d06CellsSql)",
+      s"${orthantSql(5, 16)} % ($d06CellsSql)", "e, tot")) { (s, dir) =>
+    // d13's plan plus the 1-row corpus total broadcast into the pin
+    // for the width mask
+    val ind = D06Thresholds.map(t => when(col("nv") > t, 1L).otherwise(0L))
+    val tot = Tables.load(s, dir, "embeddings")
+      .agg(count(lit(1)).as("nv"))
+      .select(ind.map(i => lit(1L) + i).foldLeft(lit(16L))(_ * _)
+        .as("b2"))
+    cosineBandPairs(Pin(scaledEmbeddings(s, dir)
+      .crossJoin(broadcast(tot))
+      .withColumn("c1", orthantCol(1, 16) % col("b2"))
+      .withColumn("c2", orthantCol(5, 16) % col("b2"))
+      .drop("b2")))
   }
-
-  val d06 = embNearDupAutoQ("d06_embedding_neardup")
 
   // d13 — the fixed wide configuration kept as the documented contrast
   // tier (non-overlapping 8-bit orthant bands over dims 1–16); d06's
   // auto-width derivation reaches the same cell COUNT at ≥19.2k
   // vectors (band-2 dims differ — see the anchoring note above).
-  val d13 = embNearDupQ("d13_embedding_neardup_wide", 8)
+  val d13 = Q(
+    "d13_embedding_neardup_wide",
+    embNearDupSql("", orthantSql(1, 8), orthantSql(9, 8), "e")) {
+    (s, dir) =>
+      cosineBandPairs(Pin(scaledEmbeddings(s, dir)
+        .withColumn("c1", orthantCol(1, 8))
+        .withColumn("c2", orthantCol(9, 8))))
+  }
 
   // ---------------------------------------------------------------
   // d10 dedup APPLY — the step that actually produces the cleaned
@@ -1081,9 +1074,9 @@ object TextDedup {
   // set) side; ties break toward the smaller doc_id (x.doc_id <
   // y.doc_id keeps one row per pair in both engines).
   //
-  // Scale shape: same inverted-index candidate generation as d02 —
-  // gid equi-join on the shared [[sizedGids]] pin (exchange-free off
-  // the cache), pair volume bounded by the [[autoDfCap]] Σ df²
+  // Scale shape: d02's inverted-index candidate generation
+  // ([[gramPairCounts]], exchange-free off the shared [[sizedGids]]
+  // pin), pair volume bounded by the [[autoDfCap]] Σ df²
   // budget. No size-ratio prefilter exists for containment (that
   // asymmetry is the operator's point: C≥t imposes no constraint on
   // n_b/n_a), so the cap is the ONLY pair-volume guard — which is
@@ -1112,15 +1105,7 @@ object TextDedup {
       |       JOIN n nb ON p.doc_b = nb.doc_id
       |WHERE CAST(inter AS DOUBLE) / LEAST(na.n, nb.n)
       |  >= $ContainMin""".stripMargin) { (s, dir) =>
-    val par = Par.forInput(s, dir, "documents")
-    val hn = sizedGids(s, dir)
-    hn.toDF("doc_a", "gid", "na")
-      .join(hn.toDF("doc_b", "gid", "nb"), "gid")
-      .filter(col("doc_a") < col("doc_b"))
-      .repartition(par, col("doc_a"), col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"),
-        max("na").as("na"), max("nb").as("nb"))
+    gramPairCounts(s, dir)
       .withColumn("n_contained", least(col("na"), col("nb")))
       .withColumn("containment",
         col("inter").cast(DoubleType) / col("n_contained"))
@@ -1173,6 +1158,14 @@ object TextDedup {
     * bit-identical to the historical composition; Heaps-100× (500k)
     * sits above. */
   private[queries] val EnsembleExactMax = 100000L
+
+  /** d16's exact scores, Jaccard and containment, off one
+    * [[interAgg]] relation — the oracle's `pj`/`cpj` columns. */
+  private def pairScores(counts: DataFrame): DataFrame =
+    counts.withColumn("jac", col("inter").cast(DoubleType) /
+        (col("na") + col("nb") - col("inter")))
+      .withColumn("contain",
+        col("inter").cast(DoubleType) / least(col("na"), col("nb")))
   val d16 = Q(
     "d16_ensemble_dups",
     s"""$mhSigCte,
@@ -1195,14 +1188,10 @@ object TextDedup {
       |      FROM pp JOIN nn na ON pp.doc_a = na.doc_id
       |              JOIN nn nb ON pp.doc_b = nb.doc_id),
       |sb AS (SELECT doc_id,
-      |${(0 until 60).map(b =>
-        s"        SUM(CASE WHEN (gid >> $b) & 1 = 1" +
-          s" THEN 1 ELSE -1 END) AS s$b").mkString(",\n")}
+      |${simhashSumsSql("gid")}
       |       FROM gd GROUP BY doc_id),
       |sm AS (SELECT doc_id, CAST(
-      |${(0 until 60).map(b =>
-        s"        (CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END)")
-        .mkString(" +\n")}
+      |$simhashAssembleSql
       |        AS BIGINT) AS sh FROM sb),
       |sme AS (SELECT doc_id, sh % (SELECT $simhashW2Sql FROM tot)
       |          AS simhash FROM sm),
@@ -1260,7 +1249,7 @@ object TextDedup {
     // the cache every detector below reads) — no dedicated corpus
     // scan for the scalar.
     val nd = eligibleDocCount(s, dir)
-    val exact =
+    val scored =
       if (nd <= EnsembleExactMax) {
         // ONE shared pair-score relation for both exact detectors
         // (guide §1.2/§2.4): composing d02.run + d15.run here ran the
@@ -1273,23 +1262,7 @@ object TextDedup {
         // reach JaccardMin (proven output-identity there), and with
         // doc_a < doc_b the containment pair is already
         // (least, greatest)-normalized.
-        val par = Par.forInput(s, dir, "documents")
-        val hn = sizedGids(s, dir)
-        val scored = Pin(hn.toDF("doc_a", "gid", "na")
-          .join(hn.toDF("doc_b", "gid", "nb"), "gid")
-          .filter(col("doc_a") < col("doc_b"))
-          .repartition(par, col("doc_a"), col("doc_b"))
-          .groupBy("doc_a", "doc_b")
-          .agg(count(lit(1)).as("inter"),
-            max("na").as("na"), max("nb").as("nb"))
-          .withColumn("jac", col("inter").cast(DoubleType) /
-            (col("na") + col("nb") - col("inter")))
-          .withColumn("contain",
-            col("inter").cast(DoubleType) / least(col("na"), col("nb"))))
-        tag(scored.filter(col("jac") >= JaccardMin), "jaccard")
-          .unionByName(
-            tag(scored.filter(col("contain") >= ContainMin),
-              "containment"))
+        Pin(pairScores(gramPairCounts(s, dir)))
       } else {
         // wide tier: exact scores VERIFY the hash candidates. Both
         // hash frames feed the consensus AND this union — pin the
@@ -1300,21 +1273,13 @@ object TextDedup {
         val cand = Pin(mh.select("doc_a", "doc_b")
           .unionByName(sh.select("doc_a", "doc_b"))
           .distinct())
-        val scored = cand
+        pairScores(interAgg(cand
           .join(hn.toDF("doc_a", "gid", "na"), "doc_a")
-          .join(hn.toDF("doc_b", "gid", "nb"), Seq("doc_b", "gid"))
-          .groupBy("doc_a", "doc_b")
-          .agg(count(lit(1)).as("inter"),
-            max("na").as("na"), max("nb").as("nb"))
-          .withColumn("jac", col("inter").cast(DoubleType) /
-            (col("na") + col("nb") - col("inter")))
-          .withColumn("contain",
-            col("inter").cast(DoubleType) / least(col("na"), col("nb")))
-        tag(scored.filter(col("jac") >= JaccardMin), "jaccard")
-          .unionByName(
-            tag(scored.filter(col("contain") >= ContainMin),
-              "containment"))
+          .join(hn.toDF("doc_b", "gid", "nb"), Seq("doc_b", "gid"))))
       }
+    val exact = tag(scored.filter(col("jac") >= JaccardMin), "jaccard")
+      .unionByName(
+        tag(scored.filter(col("contain") >= ContainMin), "containment"))
     val allp = exact.unionByName(mh).unionByName(sh)
     def flag(det: String) =
       max(when(col("det") === det, 1).otherwise(0))

@@ -31,6 +31,17 @@ object VectorSearch {
     * rows no matter how large the corpus grows. */
   private[graft] val V01Queries = 20
 
+  /** v01's bounded query set over any relation carrying `vec_id`:
+    * sampled ids, unique-key ORDER BY + LIMIT, so both engines pick the
+    * identical set — the one definition every query-set consumer
+    * uses. */
+  private def querySet(df: DataFrame): DataFrame =
+    df.filter(col("vec_id") % 50 === 0).orderBy("vec_id").limit(V01Queries)
+
+  /** Oracle twin of [[querySet]]: the clause after `FROM <relation>`. */
+  private val QuerySetSql =
+    s"WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT $V01Queries"
+
   /** Oracle fragment: embeddings pre-scaled to integer vectors
     * (sx_i = round(x_i·1e6), one rounding per element per VECTOR), plus
     * the integer squared norm. The pair-loop dot product is then pure
@@ -60,8 +71,7 @@ object VectorSearch {
     "v01_knn_bruteforce",
     s"""$normCte,
       |q AS (SELECT vec_id AS q_id, sx AS q_sx, n AS q_n
-      |      FROM e WHERE vec_id % 50 = 0
-      |      ORDER BY vec_id LIMIT $V01Queries),
+      |      FROM e $QuerySetSql),
       |p AS (SELECT q.q_id, e.vec_id AS neighbor_id,
       |        $dotSql::DOUBLE / (sqrt(q.q_n::DOUBLE) * sqrt(e.n::DOUBLE)) AS cosine
       |      FROM q JOIN e ON e.vec_id <> q.q_id)
@@ -73,8 +83,7 @@ object VectorSearch {
     // the bounded query set: sampled ids, unique-key ORDER BY + LIMIT
     // so both engines pick the identical set; broadcast size is
     // V01Queries rows regardless of corpus size
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .orderBy("vec_id").limit(V01Queries)
+    val q = querySet(e)
       .select(col("vec_id").as("q_id"), col("sx").as("q_sx"),
         col("n").as("q_n"))
     val w = Window.partitionBy("q_id")
@@ -400,8 +409,7 @@ object VectorSearch {
       |$coarseAssignCtes,
       |e AS (SELECT vec_id, sx, n FROM el),
       |q AS (SELECT vec_id AS q_id, sx AS q_sx, n AS q_n
-      |      FROM e WHERE vec_id % 50 = 0
-      |      ORDER BY vec_id LIMIT $V01Queries),
+      |      FROM e $QuerySetSql),
       |truth AS (SELECT q_id, neighbor_id FROM (
       |    SELECT q.q_id, e.vec_id AS neighbor_id,
       |      ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
@@ -445,9 +453,7 @@ object VectorSearch {
       // it feeds the hit join across reps.
       val truth = graft.operators.Pin(
         v01.run(s, dir).select("q_id", "neighbor_id"))
-      val qIds = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") % 50 === 0)
-        .orderBy("vec_id").limit(V01Queries)
+      val qIds = querySet(Tables.load(s, dir, "embeddings"))
         .select(col("vec_id").as("q_id"))
       val ar = v04.run(s, dir).select("q_id", "neighbor_id")
         .join(broadcast(qIds), "q_id")
@@ -527,77 +533,57 @@ object VectorSearch {
       |  sqrt(sh.sq::DOUBLE / 1e12) AS shift
       |FROM mem JOIN sh ON mem.cell = sh.cell""".stripMargin) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
-    // seed centroids: exact scaled-integer sums per (label, dim) —
-    // pinned because the relation is both collected (below) and
-    // joined by the shift report; one corpus pass, not two
-    val cm = graft.operators.Pin(emb
-      .select(col("label"),
-        posexplode(col("embedding")).as(Seq("pos0", "x")))
-      .groupBy("label", "pos0")
-      .agg(sum(round(col("x").cast(DoubleType) * 1e9).cast(LongType))
-        .as("sxs"), count(lit(1)).as("c")))
-    // k·d doubles to the driver — same arithmetic as the oracle's cm
-    // CTE (sxs::DOUBLE / (c*1e9)), so the literals baked into the
-    // assignment expressions are bit-equal to what DuckDB divides.
-    // Width comes from the observed positions, not an assumed 64
-    // (the v05 hardcoded-dims lesson).
-    val cenRows = cm.collect()
-    if (cenRows.isEmpty) {
-      // degenerate corpus: no vectors -> no cells, schema-only result
-      emb.select(col("label").as("cell"), lit(0L).as("n_members"),
-        lit(0L).as("n_switched"), lit(0.0).as("shift")).limit(0)
-    } else {
-    val width = cenRows.map(_.getInt(1)).max + 1
-    val cen: Map[Int, Array[Double]] = cenRows
-      .groupBy(_.getInt(0))
-      .map { case (l, rows) =>
-        val arr = new Array[Double](width)
-        rows.foreach(r =>
-          arr(r.getInt(1)) = r.getLong(2).toDouble / (r.getLong(3) * 1e9))
-        l -> arr
-      }
-    // one native pass per vector ([[graft.functions.CentroidArgmin]]):
-    // k rounded-term distances + argmin with the (ds, cell) tie-break
-    // in a single JVM loop — the composed k-way zip_with/aggregate/
-    // array_min column is interpreted (HOFs are CodegenFallback) and
-    // measured ~2.4× slower end-to-end; identical arithmetic, so the
-    // oracle hash is unchanged
-    val cells = cen.keys.toSeq.sorted
-    val best = VectorExprs.centroidArgmin(col("embedding"),
-      cells, cells.map(l => cen(l).toSeq))
-    // pinned: two consumers (membership stats and the re-average)
-    // would otherwise each pay the k-way distance scan. NULL and
-    // EMPTY embeddings both drop — the oracle's unnest emits no rows
-    // for either, so they exist in no `a` assignment — and the one
-    // size predicate covers both (size(null) is null) ON THE INPUT
-    // COLUMN: filtering `cell` would push the predicate below the
-    // projection and re-run the native argmin per row.
-    val assigned = graft.operators.Pin(
-      emb.filter(size(col("embedding")) > 0)
-        .select(col("vec_id"), col("label"), col("embedding"),
-          best.as("cell")))
-    val mem = assigned.groupBy("cell").agg(
-      count(lit(1)).as("n_members"),
-      sum(when(col("label") =!= col("cell"), 1L).otherwise(0L))
-        .as("n_switched"))
-    val ncm = assigned
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos0", "x")))
-      .groupBy("cell", "pos0")
-      .agg(sum(round(col("x").cast(DoubleType) * 1e9).cast(LongType))
-        .as("sxs2"), count(lit(1)).as("c2"))
-      .select(col("cell"), col("pos0"),
-        (col("sxs2").cast(DoubleType) / (col("c2") * lit(1e9))).as("m2"))
-    val cmM = cm.select(col("label"), col("pos0").as("cpos"),
-      (col("sxs").cast(DoubleType) / (col("c") * lit(1e9))).as("m"))
-    val sh = ncm.join(broadcast(cmM),
-        ncm("cell") === cmM("label") && ncm("pos0") === cmM("cpos"))
-      .select(col("cell"),
-        round((col("m2") - col("m")) * (col("m2") - col("m")) * lit(1e12))
-          .cast(LongType).as("term"))
-      .groupBy("cell").agg(sum("term").as("sq"))
-    mem.join(sh, "cell")
-      .select(col("cell"), col("n_members"), col("n_switched"),
-        sqrt(col("sq").cast(DoubleType) / lit(1e12)).as("shift"))
+    // seed centroids: the codebook sums, also joined by the shift
+    // report below (the pin keeps that to one corpus pass)
+    val cm = codebookSums(emb)
+    collectCodebook(cm) match {
+      case None =>
+        // degenerate corpus: no vectors -> no cells, schema-only result
+        emb.select(col("label").as("cell"), lit(0L).as("n_members"),
+          lit(0L).as("n_switched"), lit(0.0).as("shift")).limit(0)
+      case Some((cells, cen)) =>
+        // one native pass per vector ([[graft.functions.CentroidArgmin]]):
+        // k rounded-term distances + argmin with the (ds, cell) tie-break
+        // in a single JVM loop — the composed k-way zip_with/aggregate/
+        // array_min column is interpreted (HOFs are CodegenFallback) and
+        // measured ~2.4× slower end-to-end; identical arithmetic, so the
+        // oracle hash is unchanged
+        val best = VectorExprs.centroidArgmin(col("embedding"),
+          cells, cells.map(l => cen(l).toSeq))
+        // pinned: two consumers (membership stats and the re-average)
+        // would otherwise each pay the k-way distance scan. NULL and
+        // EMPTY embeddings both drop — the oracle's unnest emits no rows
+        // for either, so they exist in no `a` assignment — and the one
+        // size predicate covers both (size(null) is null) ON THE INPUT
+        // COLUMN: filtering `cell` would push the predicate below the
+        // projection and re-run the native argmin per row.
+        val assigned = graft.operators.Pin(
+          emb.filter(size(col("embedding")) > 0)
+            .select(col("vec_id"), col("label"), col("embedding"),
+              best.as("cell")))
+        val mem = assigned.groupBy("cell").agg(
+          count(lit(1)).as("n_members"),
+          sum(when(col("label") =!= col("cell"), 1L).otherwise(0L))
+            .as("n_switched"))
+        val ncm = assigned
+          .select(col("cell"),
+            posexplode(col("embedding")).as(Seq("pos0", "x")))
+          .groupBy("cell", "pos0")
+          .agg(sum(round(col("x").cast(DoubleType) * 1e9).cast(LongType))
+            .as("sxs2"), count(lit(1)).as("c2"))
+          .select(col("cell"), col("pos0"),
+            (col("sxs2").cast(DoubleType) / (col("c2") * lit(1e9))).as("m2"))
+        val cmM = cm.select(col("label"), col("pos0").as("cpos"),
+          (col("sxs").cast(DoubleType) / (col("c") * lit(1e9))).as("m"))
+        val sh = ncm.join(broadcast(cmM),
+            ncm("cell") === cmM("label") && ncm("pos0") === cmM("cpos"))
+          .select(col("cell"),
+            round((col("m2") - col("m")) * (col("m2") - col("m")) * lit(1e12))
+              .cast(LongType).as("term"))
+          .groupBy("cell").agg(sum("term").as("sq"))
+        mem.join(sh, "cell")
+          .select(col("cell"), col("n_members"), col("n_switched"),
+            sqrt(col("sq").cast(DoubleType) / lit(1e12)).as("shift"))
     }
   }
 
@@ -663,7 +649,7 @@ object VectorSearch {
       |FROM a JOIN embeddings e2 ON a.vec_id = e2.vec_id
       |GROUP BY a.vec_id, e2.label""".stripMargin) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
-    collectCodebook(emb) match {
+    collectCodebook(codebookSums(emb)) match {
       case None =>
         emb.select(col("vec_id"), col("label"), lit("").as("codes"),
           lit(0L).as("sq_err_scaled"), lit(0.0).as("mse")).limit(0)
@@ -687,24 +673,32 @@ object VectorSearch {
     }
   }
 
-  /** Driver-collected PQ codebook: sorted code ids plus per-code mean
-    * vectors from exact scaled-integer sums — the same per-(label, dim)
-    * means v07 seeds from, k·d doubles of driver state (the Lloyd's
-    * sync point every quantizer pays). None on an empty corpus. */
-  private def collectCodebook(
-      emb: DataFrame): Option[(Seq[Int], Map[Int, Array[Double]])] = {
-    // pinned BEFORE the collect: the codebook is (labels × dims) rows
-    // but its build is a corpus-grain posexplode+agg — v09, v10, v17
-    // each call this per invocation and v18 embeds two of them, so
-    // without the pin the corpus pass re-ran per caller (r11; the
-    // collect itself stays |labels·dims|-bounded driver sync)
-    val cenRows = graft.operators.Pin(emb
+  /** The codebook's exact scaled-integer sums per (label, dim):
+    * `(label, pos0, sxs, c)`, the oracle's `cen` CTE. Pinned: the
+    * relation is (labels × dims) rows but its build is a corpus-grain
+    * posexplode+agg — v07-v10 and v17 each read it per invocation and
+    * v18 embeds two of them, so without the pin the corpus pass
+    * re-ran per caller (the collect itself stays |labels·dims|-bounded
+    * driver sync). */
+  private def codebookSums(emb: DataFrame): DataFrame =
+    graft.operators.Pin(emb
       .select(col("label"),
         posexplode(col("embedding")).as(Seq("pos0", "x")))
       .groupBy("label", "pos0")
       .agg(sum(round(col("x").cast(DoubleType) * 1e9).cast(LongType))
         .as("sxs"), count(lit(1)).as("c")))
-      .collect()
+
+  /** Driver-collected codebook from [[codebookSums]]: sorted code ids
+    * plus per-code mean vectors, k·d doubles of driver state (the
+    * Lloyd's sync point every quantizer pays) — the seed centroids of
+    * v07 and the PQ codebook of v08-v10 and v17. Same arithmetic as
+    * the oracle's cm CTE (sxs::DOUBLE / (c*1e9)), so the literals
+    * baked into the assignment and encode expressions are bit-equal
+    * to what DuckDB divides; the width comes from the observed
+    * positions, not an assumed 64. None on an empty corpus. */
+  private def collectCodebook(
+      sums: DataFrame): Option[(Seq[Int], Map[Int, Array[Double]])] = {
+    val cenRows = sums.collect()
     if (cenRows.isEmpty) None
     else {
       val width = cenRows.map(_.getInt(1)).max + 1
@@ -743,8 +737,7 @@ object VectorSearch {
     * `q` bounded spine → `qx` query elements → `lut` per-(query,
     * subspace, code) scaled squared distances. */
   private val pqLutCtes =
-    s"""q AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0
-      |      ORDER BY vec_id LIMIT $V01Queries),
+    s"""q AS (SELECT vec_id AS q_id FROM embeddings $QuerySetSql),
       |qx AS (SELECT ex.vec_id AS q_id, ex.pos, ex.x
       |       FROM ex JOIN q ON ex.vec_id = q.q_id),
       |lut AS (SELECT qx.q_id, CAST((qx.pos-1)//$SubDims AS BIGINT) AS sub,
@@ -769,7 +762,7 @@ object VectorSearch {
       |        ORDER BY adc_scaled, neighbor_id) AS rnk FROM p) z
       |WHERE rnk <= 5""".stripMargin) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
-    collectCodebook(emb) match {
+    collectCodebook(codebookSums(emb)) match {
       case None =>
         emb.select(col("vec_id").as("q_id"),
           col("vec_id").as("neighbor_id"), lit(1).as("rnk"),
@@ -807,8 +800,7 @@ object VectorSearch {
   private def collectAdcLut(emb: DataFrame, codeIds: Seq[Int],
       cen: Map[Int, Array[Double]]): (Seq[Long], Seq[Seq[Long]]) = {
     val k = codeIds.length
-    val qRows = emb.filter(col("vec_id") % 50 === 0)
-      .orderBy("vec_id").limit(V01Queries)
+    val qRows = querySet(emb)
       .select("vec_id", "embedding").collect()
     val built = qRows.flatMap { r =>
       // null AND empty query embeddings consume their LIMIT slot but
@@ -918,7 +910,7 @@ object VectorSearch {
       |        ORDER BY adc_scaled, neighbor_id) AS rnk FROM p) z
       |WHERE rnk <= 5""".stripMargin) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
-    collectCodebook(emb) match {
+    collectCodebook(codebookSums(emb)) match {
       case None =>
         emb.select(col("vec_id").as("q_id"),
           col("vec_id").as("neighbor_id"), col("label").as("cell"),
@@ -996,8 +988,7 @@ object VectorSearch {
       |  FROM e),
       |q AS (SELECT vec_id AS q_id, sx AS q_sx, n AS q_n,
       |        lo AS q_lo, hi AS q_hi
-      |      FROM bq WHERE vec_id % 50 = 0
-      |      ORDER BY vec_id LIMIT $V01Queries),
+      |      FROM bq $QuerySetSql),
       |h AS (SELECT q.q_id, bq.vec_id AS neighbor_id,
       |        CAST(bit_count(xor(q.q_lo, bq.lo))
       |           + bit_count(xor(q.q_hi, bq.hi)) AS BIGINT) AS hamming
@@ -1025,8 +1016,7 @@ object VectorSearch {
     // the 20-row query set feeds TWO broadcasts (packed words for the
     // hamming pass, sx/norm for the rerank) — pinned so the
     // filter+pack+TakeOrdered job runs once, not once per broadcast
-    val q = graft.operators.Pin(bq.filter(col("vec_id") % 50 === 0)
-      .orderBy("vec_id").limit(V01Queries)
+    val q = graft.operators.Pin(querySet(bq)
       .select(col("vec_id").as("q_id"), col("sx").as("q_sx"),
         col("n").as("q_n"), col("lo").as("q_lo"), col("hi").as("q_hi")))
     // the packed sign index is a MATERIALIZED artifact (pinned): the
@@ -1091,8 +1081,7 @@ object VectorSearch {
     "v12_trunc_recall",
     s"""$normCte,
       |q AS (SELECT vec_id AS q_id, sx AS q_sx, n AS q_n
-      |      FROM e WHERE vec_id % 50 = 0
-      |      ORDER BY vec_id LIMIT $V01Queries),
+      |      FROM e $QuerySetSql),
       |truth AS (SELECT q_id, neighbor_id FROM (
       |    SELECT q.q_id, e.vec_id AS neighbor_id,
       |      ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
@@ -1132,8 +1121,7 @@ object VectorSearch {
       val truth = graft.operators.Pin(
         v01.run(s, dir).select("q_id", "neighbor_id"))
       val e = eFrame(s, dir)
-      val q = graft.operators.Pin(e.filter(col("vec_id") % 50 === 0)
-        .orderBy("vec_id").limit(V01Queries)
+      val q = graft.operators.Pin(querySet(e)
         .select(col("vec_id").as("q_id"), col("sx").as("q_sx")))
       def approx(w: Int): DataFrame = {
         val tx = slice(col("sx"), 1, w)
@@ -1190,8 +1178,7 @@ object VectorSearch {
     "v13_hybrid_rrf",
     s"""$normCte,
       |q AS (SELECT vec_id AS q_id, sx AS q_sx, n AS q_n
-      |      FROM e WHERE vec_id % 50 = 0
-      |      ORDER BY vec_id LIMIT $V01Queries),
+      |      FROM e $QuerySetSql),
       |sem AS (SELECT q_id, neighbor_id AS doc_id, rnk AS sem_rank
       |  FROM (SELECT q.q_id, e.vec_id AS neighbor_id,
       |      ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
@@ -1232,8 +1219,7 @@ object VectorSearch {
       |    ORDER BY rrf_score DESC, doc_id) AS rrf_rank FROM fused) t
       |WHERE rrf_rank <= 10""".stripMargin) { (s, dir) =>
     val e = eFrame(s, dir)
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .orderBy("vec_id").limit(V01Queries)
+    val q = querySet(e)
       .select(col("vec_id").as("q_id"), col("sx").as("q_sx"),
         col("n").as("q_n"))
     val semW = Window.partitionBy("q_id")
@@ -1632,8 +1618,7 @@ object VectorSearch {
     "v15_mmr_diversify",
     s"""$normCte,
       |q AS (SELECT vec_id AS q_id, sx AS q_sx, n AS q_n
-      |      FROM e WHERE vec_id % 50 = 0
-      |      ORDER BY vec_id LIMIT $V01Queries),
+      |      FROM e $QuerySetSql),
       |pool AS (SELECT * FROM (SELECT *, ROW_NUMBER() OVER (
       |      PARTITION BY q_id ORDER BY rel DESC, cand_id) AS rnk
       |    FROM (SELECT q.q_id, e.vec_id AS cand_id, e.sx, e.n,
@@ -1662,8 +1647,7 @@ object VectorSearch {
       |  ms AS max_sim_prior
       |FROM s$MmrK""".stripMargin) { (s, dir) =>
     val e = eFrame(s, dir)
-    val q = e.filter(col("vec_id") % 50 === 0)
-      .orderBy("vec_id").limit(V01Queries)
+    val q = querySet(e)
       .select(col("vec_id").as("q_id"), col("sx").as("q_sx"),
         col("n").as("q_n"))
     val poolW = Window.partitionBy("q_id")
@@ -1851,7 +1835,7 @@ object VectorSearch {
       |        ORDER BY cosine DESC, neighbor_id) AS rnk FROM r) t
       |WHERE rnk <= 5""".stripMargin) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
-    collectCodebook(emb) match {
+    collectCodebook(codebookSums(emb)) match {
       case None =>
         emb.select(col("vec_id").as("q_id"),
           col("vec_id").as("neighbor_id"), lit(1).as("rnk"),
@@ -1874,8 +1858,7 @@ object VectorSearch {
         // against the raw-vector relation (corpus side never
         // shuffles), query spine broadcasts as in v01
         val e = eFrame(s, dir)
-        val q = e.filter(col("vec_id") % 50 === 0)
-          .orderBy("vec_id").limit(V01Queries)
+        val q = querySet(e)
           .select(col("vec_id").as("q_id"), col("sx").as("q_sx"),
             col("n").as("q_n"))
         val wCos = Window.partitionBy("q_id")
@@ -1915,7 +1898,7 @@ object VectorSearch {
       |a10 AS (${v10.oracle.get}),
       |a17 AS (${v17.oracle.get}),
       |spine AS (SELECT vec_id AS q_id FROM embeddings
-      |          WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT $V01Queries),
+      |          $QuerySetSql),
       |m AS (SELECT 'ivfpq' AS method, q_id, neighbor_id FROM a10
       |      UNION ALL
       |      SELECT 'ivfpq_refine', q_id, neighbor_id FROM a17),
@@ -1939,9 +1922,7 @@ object VectorSearch {
           col("neighbor_id")))
     val hits = truth.join(m, Seq("q_id", "neighbor_id"))
       .groupBy("method", "q_id").agg(count(lit(1)).as("c"))
-    val spine = Tables.load(s, dir, "embeddings")
-      .filter(col("vec_id") % 50 === 0)
-      .orderBy("vec_id").limit(V01Queries)
+    val spine = querySet(Tables.load(s, dir, "embeddings"))
       .select(col("vec_id").as("q_id"))
     import s.implicits._
     spine.crossJoin(
@@ -1995,8 +1976,7 @@ object VectorSearch {
       |        FROM e JOIN embeddings emb ON e.vec_id = emb.vec_id),
       |q AS (SELECT vec_id AS q_id, label AS q_label, sx AS q_sx,
       |        n AS q_n
-      |      FROM lab WHERE vec_id % 50 = 0
-      |      ORDER BY vec_id LIMIT $V01Queries),
+      |      FROM lab $QuerySetSql),
       |neg AS (SELECT q.q_id, q.q_label, e.vec_id AS neighbor_id,
       |          e.label AS neighbor_label,
       |          $dotSql::DOUBLE / (sqrt(q.q_n::DOUBLE) * sqrt(e.n::DOUBLE))
@@ -2016,8 +1996,7 @@ object VectorSearch {
       |JOIN pos p ON n.q_id = p.q_id
       |WHERE n.rnk <= 5""".stripMargin) { (s, dir) =>
     val lab = elFrame(Tables.load(s, dir, "embeddings"))
-    val q = lab.filter(col("vec_id") % 50 === 0)
-      .orderBy("vec_id").limit(V01Queries)
+    val q = querySet(lab)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("sx").as("q_sx"), col("n").as("q_n"))
     val joined = lab.join(broadcast(q), col("vec_id") =!= col("q_id"))

@@ -39,4 +39,18 @@ class PinSpec extends SparkTestBase {
       spark.sharedState.cacheManager.clearCache()
     }
   }
+
+  test("d12 reads d04's SimHash signature pin: after d04, d12 caches " +
+      "no relation of its own") {
+    import graft.queries.TextDedup
+    val sc = spark.sparkContext
+    spark.sharedState.cacheManager.clearCache()
+    try {
+      TextDedup.d04.run(spark, sf).collect()
+      val before = sc.getPersistentRDDs.keySet
+      TextDedup.d12.run(spark, sf).collect()
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.isEmpty, s"d12 cached ${added.size} new relation(s)")
+    } finally spark.sharedState.cacheManager.clearCache()
+  }
 }
