@@ -9,12 +9,13 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
   * query N times in one session and prints two lines per query:
   * {{{
   * PROFILE <name> t1 t2 …                 seconds per rep, end to end
-  * COUNTS <name> build=b1,b2,… jobs=j1,j2,… stages=… tasks=…
+  * COUNTS <name> build=b1,b2,… build_jobs=… jobs=j1,j2,… stages=… tasks=…
   * }}}
   * Rep 1 carries the one-shot cost (Catalyst, Janino codegen, AQE
   * re-plans, pin fills); reps 2+ are the steady state. `build` is the
   * seconds until `fn(spark, dir)` returned, which includes any job run
-  * while the plan is built. The counts are the jobs, stages and tasks
+  * while the plan is built; `build_jobs` counts those jobs, and `jobs`
+  * counts them too. The counts are the jobs, stages and tasks
   * each rep scheduled; they depend on the plan shape, not the clock,
   * which makes them the signal to read on a noisy box.
   *
@@ -32,10 +33,14 @@ object BenchProfile {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** One rep: end-to-end and construction seconds, and the jobs,
-    * stages and tasks it scheduled. */
+  /** One rep: end-to-end and construction seconds, the jobs run while
+    * the plan was built, and the jobs, stages and tasks it scheduled. */
   private[graft] final case class Rep(secs: Double, buildSecs: Double,
-      jobs: Long, stages: Long, tasks: Long)
+      buildJobs: Long, jobs: Long, stages: Long, tasks: Long)
+
+  /** Local property marking the jobs started while a query is built;
+    * Spark copies it to every job the calling thread starts. */
+  private val PhaseKey = "graft.profile.phase"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -73,10 +78,14 @@ object BenchProfile {
   private[graft] def profile(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
       reps: Int, isolate: Boolean): Seq[(String, Seq[Rep])] = {
-    val jobs, stages, tasks = new AtomicLong
+    val buildJobs, jobs, stages, tasks = new AtomicLong
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        if (j.properties != null &&
+            j.properties.getProperty(PhaseKey) == "build")
+          buildJobs.incrementAndGet()
+      }
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
         stages.incrementAndGet()
       override def onTaskStart(t: SparkListenerTaskStart): Unit =
@@ -88,9 +97,12 @@ object BenchProfile {
       GraftColumnBridge.drainListenerBus(sc)
       queries.map { case (name, fn) =>
         val runs = (1 to reps).map { i =>
-          val (j0, s0, k0) = (jobs.get, stages.get, tasks.get)
+          val (b0, j0, s0, k0) =
+            (buildJobs.get, jobs.get, stages.get, tasks.get)
           val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
+          sc.setLocalProperty(PhaseKey, "build")
+          val df = try fn(spark, sfDir)
+            finally sc.setLocalProperty(PhaseKey, null)
           val t1 = System.nanoTime()
           df.write.format("noop").mode("overwrite").save()
           val t2 = System.nanoTime()
@@ -107,13 +119,13 @@ object BenchProfile {
           // stops, so the pause is untimed; the persist pin is
           // registry-held and survives GC.
           if (isolate && i < reps) System.gc()
-          Rep((t2 - t0) / 1e9, (t1 - t0) / 1e9,
+          Rep((t2 - t0) / 1e9, (t1 - t0) / 1e9, buildJobs.get - b0,
             jobs.get - j0, stages.get - s0, tasks.get - k0)
         }
         println(f"PROFILE $name%-28s ${runs.map(r => fmt(r.secs)).mkString(" ")}")
         def each(f: Rep => Any) = runs.map(f).mkString(",")
         println(s"COUNTS $name build=${each(r => fmt(r.buildSecs))} " +
-          s"jobs=${each(_.jobs)} stages=${each(_.stages)} tasks=${each(_.tasks)}")
+          s"build_jobs=${each(_.buildJobs)} jobs=${each(_.jobs)} stages=${each(_.stages)} tasks=${each(_.tasks)}")
         if (isolate) {
           spark.catalog.clearCache()
           // the iterative drivers' last-round checkpoints never

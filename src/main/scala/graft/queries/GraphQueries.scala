@@ -25,8 +25,12 @@ object GraphQueries {
       .filter(col("nxt").isNotNull)
       .groupBy(col("event_type").as("src"), col("nxt").as("dst"))
       .agg(count(lit(1)).as("c"))
-    val avg = tr.agg((sum("c") / count(lit(1))).as("avg"))
-    tr.crossJoin(avg).filter(col("c") > col("avg")).select("src", "dst")
+    // the average over the aggregated transitions (≤ |event types|²
+    // rows) as an unbounded window on them: one single-partition
+    // stage, no global aggregate broadcast back
+    val all = Window.partitionBy()
+    tr.withColumn("avg", sum("c").over(all) / count(lit(1)).over(all))
+      .filter(col("c") > col("avg")).select("src", "dst")
   }
 
   private val edgesCte =

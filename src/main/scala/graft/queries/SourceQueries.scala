@@ -1157,7 +1157,7 @@ object SourceQueries {
     // and the exact arm's membership join below previously each ran
     // their own distinct aggregation over the capped-gid pin — the
     // sizing count now materializes this pin and the other two read
-    // cache. assumeDistinct skips buildFilter's internal re-dedup
+    // cache. expectDistinct skips buildFilter's internal re-dedup
     // (cache substitution happens after redundant-aggregate
     // elimination, so it would plan as a second full aggregation).
     val evalDistinct = Pin(
@@ -1166,7 +1166,7 @@ object SourceQueries {
     // streaming intake gate (graft.streaming.DecontamGate — its
     // screen probes the same sketch this audit was run with)
     val bloom = graft.streaming.DecontamGate.buildFilter(
-      evalDistinct, BloomFpp, assumeDistinct = true)
+      evalDistinct, BloomFpp, expectDistinct = true)
     // the probe is Spark's own codegen'd BloomFilterMightContain over
     // the serialized sketch literal (VERDICT r8 ask #8) — the corpus
     // scan stays inside whole-stage codegen, no ScalaUDF hop

@@ -107,16 +107,20 @@ object TextDedup {
     * (exchange-free), the histogram collapses to df-VALUE grain
     * before the global-order window, so the single-task window sees
     * at most |distinct df values| rows — bounded by max df, not by
-    * corpus size. */
+    * corpus size. The corpus total |gram occurrences| = Σ df·k comes
+    * out of the same window stage (an unbounded frame on the same
+    * order), so no second pass over `g` runs. */
   private[queries] def autoDfCap(g: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
     val dfs = g.groupBy("gid").agg(count(lit(1)).as("df"))
     val hist = dfs.groupBy("df").agg(count(lit(1)).as("k"))
-    val cum = hist.select(col("df"),
-      sum(col("df").cast(dec) * col("df").cast(dec) * col("k").cast(dec))
-        .over(Window.orderBy("df")).as("cum"))
-    val tot = g.agg(count(lit(1)).cast(dec).as("t"))
-    cum.crossJoin(broadcast(tot))
+    val byDf = Window.orderBy("df")
+    hist.select(col("df"),
+        sum(col("df").cast(dec) * col("df").cast(dec) * col("k").cast(dec))
+          .over(byDf).as("cum"),
+        sum(col("df") * col("k")).over(byDf.rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing))
+          .cast(dec).as("t"))
       .filter(col("cum") <= lit(PairBudget).cast(dec) * col("t"))
       .agg(coalesce(max("df"), lit(0L)).as("rawcap"))
       .select(least(lit(MaxDfCap),
@@ -343,41 +347,40 @@ object TextDedup {
       val mins = (0 to 7).map(k =>
         min((lit(MhMix(k)._1) * col("x") + lit(MhMix(k)._2))
           % 2147483647L).as(s"m$k"))
-      // one row per doc; feeds 4 band joins + 2 signature re-joins —
-      // pin it so the shingle+hash pass runs once
+      // one row per doc, read by both sides of the band join — pin it
+      // so the shingle+hash pass runs once
       val sig = Pin(h.groupBy("doc_id").agg(mins.head, mins.tail: _*))
-      val aCols = "doc_a" +: (0 to 7).map(k => s"a$k")
-      val bCols = "doc_b" +: (0 to 7).map(k => s"b$k")
-      val sa = sig.toDF(aCols: _*)
-      val sb = sig.toDF(bCols: _*)
       // ONE band join instead of four: explode each signature to
-      // (doc_id, band, band_key) rows and self-equi-join on
+      // (doc_id, m0..m7, band, band_key) rows and self-equi-join on
       // (band, band_key). The key m_even·(2³¹−1)+m_odd is a
       // collision-free pairing of the band's two minhashes (both
       // < 2³¹−1), so this is exactly the per-band equality — 4
       // shuffles + union + distinct collapse into 1 join + 1 distinct.
+      // The band rows carry the whole signature, so the agreement count
+      // is computed in the join and needs no pair-grain re-join; it is
+      // a function of the pair, so the distinct over
+      // (doc_a, doc_b, n_matching_minhashes) keeps one row per pair.
       val bandKeys = (0 to 3).map(band =>
         col(s"m${2 * band}") * lit(2147483647L) + col(s"m${2 * band + 1}"))
-      val bands = sig.select(col("doc_id"),
-        posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
+      val bands = sig.select(sig.columns.map(col) :+
+        posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")): _*)
+      def side(doc: String, p: String) =
+        bands.toDF(doc +: (0 to 7).map(k => s"$p$k") :+ "band" :+ "bkey": _*)
+      val matches = (0 to 7)
+        .map(k => when(col(s"a$k") === col(s"b$k"), 1).otherwise(0))
+        .reduce(_ + _)
       // The left input is never broadcast. Both inputs read the same
       // pin; on a cold pin AQE would otherwise broadcast whichever
       // side's cache stage finished first, so the build side, and with
       // it the join's generated class, changed from one invocation to
       // the next.
-      val cand = GraftColumnBridge.noBroadcast(
-          bands.toDF("doc_a", "band", "bkey"))
-        .join(bands.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
+      GraftColumnBridge.noBroadcast(side("doc_a", "a"))
+        .join(side("doc_b", "b"), Seq("band", "bkey"))
         .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-      val matches = (0 to 7)
-        .map(k => when(col(s"a$k") === col(s"b$k"), 1).otherwise(0))
-        .reduce(_ + _)
-      cand.join(sa, "doc_a").join(sb, "doc_b")
         .select(col("doc_a"), col("doc_b"),
-          matches.as("n_matching_minhashes"),
-          (matches / lit(8.0)).as("est_jaccard"))
+          matches.as("n_matching_minhashes"))
+        .distinct()
+        .withColumn("est_jaccard", col("n_matching_minhashes") / lit(8.0))
   }
 
   val d03 = Q(
@@ -439,8 +442,8 @@ object TextDedup {
   // force). Both sides are the EXISTING operators' plans — the oracle
   // splices the single-sourced gram/signature fragments, so the
   // report can never drift from what d02/d03 actually compute; the
-  // three count aggregates cross-join as 1-row frames (the audited
-  // g02 pattern).
+  // three count aggregates cross-join as 1-row frames (a
+  // constant-size combine, never a pair-grain join).
   val d09 = Q(
     "d09_lsh_quality",
     s"""${mhSigCte},

@@ -69,22 +69,28 @@ object DecontamGate {
         org.apache.spark.sql.GraftColumnBridge.expression(gid)))
   }
 
+  /** Bloom filter over the one-column `gid` relation `gids`, sized by
+    * its distinct count at false-positive rate `fpp`.
+    *
+    * `expectDistinct`: a caller that already holds (and typically
+    * pins) the deduplicated relation skips the internal distinct —
+    * cache substitution happens AFTER the optimizer's redundant-
+    * aggregate elimination, so a distinct-over-cached-distinct would
+    * otherwise plan a second full aggregation per build (batch s19
+    * pays it twice: sizing count + sketch build). Nothing checks the
+    * expectation: duplicates under `expectDistinct` inflate the
+    * sizing count n, so the filter is OVERSIZED — still sound (Bloom
+    * inserts are idempotent, and a larger filter only lowers the
+    * false-positive rate), but it costs memory and a larger sketch
+    * literal in every probing task, and n no longer measures the
+    * distinct gram count. */
   def buildFilter(gids: DataFrame, fpp: Double = 0.01,
-      assumeDistinct: Boolean = false): BloomFilter = {
+      expectDistinct: Boolean = false): BloomFilter = {
     require(gids.columns.sameElements(Array("gid")),
       s"buildFilter expects exactly one column named 'gid', got " +
         s"[${gids.columns.mkString(", ")}] — project the gram-hash " +
         "column explicitly")
-    // assumeDistinct: a caller that already holds (and typically
-    // pins) the deduplicated relation skips the internal distinct —
-    // cache substitution happens AFTER the optimizer's redundant-
-    // aggregate elimination, so a distinct-over-cached-distinct
-    // would otherwise plan a second full aggregation per build
-    // (batch s19 pays it twice: sizing count + sketch build).
-    // Duplicates under assumeDistinct would only inflate the sizing
-    // count n — the filter stays sound (Bloom inserts are
-    // idempotent), just oversized.
-    val g = if (assumeDistinct) gids else gids.distinct()
+    val g = if (expectDistinct) gids else gids.distinct()
     val n = g.count()
     if (n == 0) BloomFilter.create(1L, fpp)
     else g.stat.bloomFilter("gid", n, fpp)

@@ -27,6 +27,31 @@ class GraphOpsSpec extends SparkTestBase {
     assert(d("e") === ((0L, 0L, false, false)))
   }
 
+  test("degrees: self-loop, duplicate edges, an edgeless node and an " +
+      "endpoint missing from the nodes match the two-aggregate formula") {
+    val n = Seq("a", "b", "c", "iso").toDF("id")
+    // a self-loop on a, a duplicated a -> b, b -> c, and two edges to
+    // and from x, which is not a node
+    val e = Seq(("a", "a"), ("a", "b"), ("a", "b"), ("b", "c"),
+      ("x", "a"), ("c", "x")).toDF("src", "dst")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
+        r.getBoolean(3), r.getBoolean(4)))).toMap
+    // out- and in-degree as two aggregations joined to the nodes twice
+    val d = e.distinct()
+    val out = d.groupBy(col("src").as("id")).agg(count(lit(1)).as("o"))
+    val in = d.groupBy(col("dst").as("id")).agg(count(lit(1)).as("i"))
+    val twoAgg = n.join(out, Seq("id"), "left").join(in, Seq("id"), "left")
+      .select(col("id"), coalesce(col("o"), lit(0L)),
+        coalesce(col("i"), lit(0L)),
+        coalesce(col("o"), lit(0L)) > 1, coalesce(col("i"), lit(0L)) > 1)
+    val got = rows(GraphOps.degrees(n, e))
+    assert(got === rows(twoAgg))
+    assert(got === Map("a" -> ((2L, 2L, true, true)),
+      "b" -> ((1L, 1L, false, false)), "c" -> ((1L, 1L, false, false)),
+      "iso" -> ((0L, 0L, false, false))))
+  }
+
   test("convergence of parallel branches (executor.py:1819-1852)") {
     val c = GraphOps.convergence(edges, Seq("b", "c")).collect()
     assert(c.head.getString(0) === "d") // d reachable from both, closest
@@ -51,6 +76,51 @@ class GraphOpsSpec extends SparkTestBase {
     * the driver-local union-find fast path and leave the loop untested. */
   private def distributedCC(e: org.apache.spark.sql.DataFrame,
       maxIters: Int = 50) = GraphOps.connectedComponents(e, maxIters, 0)
+
+  test("connectedComponents: the size gate's boundary — localMax edges " +
+      "solve in-process in ONE action, localMax + 1 run the loop, with " +
+      "identical labels") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val localMax = 5
+    // two components over six edges; the first five leave 6 alone
+    val all = Seq((1L, 2L), (2L, 3L), (4L, 3L), (7L, 8L), (8L, 9L),
+      (6L, 7L))
+    val execs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    def labels(edges: Seq[(Long, Long)], gate: Int) = {
+      val df = edges.toDF("src", "dst")
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(sc)
+      execs.set(0)
+      sc.addSparkListener(listener)
+      val cc = try {
+        val r = GraphOps.connectedComponents(df, 50, gate)
+        org.apache.spark.sql.GraftColumnBridge.drainListenerBus(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+      val got = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (got, execs.get, cc.queryExecution.analyzed.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    }
+    val (atGate, atExecs, atLocal) = labels(all.take(localMax), localMax)
+    assert(atLocal, "localMax edges did not take the in-process path")
+    assert(atExecs === 1, s"the local path ran $atExecs actions")
+    assert(atGate === labels(all.take(localMax), 0)._1)
+    assert(atGate === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      7L -> 7L, 8L -> 7L, 9L -> 7L))
+    val (over, overExecs, overLocal) = labels(all, localMax)
+    assert(!overLocal && overExecs > 1,
+      "localMax + 1 edges did not run the distributed loop")
+    assert(over === labels(all, GraphOps.LocalMaxEdges)._1)
+    assert(over === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      6L -> 6L, 7L -> 6L, 8L -> 6L, 9L -> 6L))
+  }
 
   test("connectedComponents: long path needs diameter rounds, converges") {
     // a 12-node path labelled in REVERSE so the min (1) sits at one

@@ -57,6 +57,49 @@ class TextDedupCapSpec extends SparkTestBase {
         "results vs the old fixed cap")
   }
 
+  /** Four levels of 10-word documents, level L repeating one sentence
+    * in 100·L docs (8 shingles of df 100·L each). Σ df²·k reaches
+    * 1.12M at df 300 and 2.40M at df 400 against a budget of
+    * 256 · 8000 gram rows = 2.05M, so the raw cap is 300: strictly
+    * between the floor and the ceiling. Each level alone fits the
+    * budget (400²·8 = 1.28M), so only a CUMULATIVE sum stops at 300. */
+  private lazy val midDir: String = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-midcap").toString
+    val docs = (1 to 4).flatMap { lvl =>
+      (0 until 100 * lvl).map { i =>
+        ((lvl * 1000 + i).toLong,
+          (1 to 10).map(w => s"lv${lvl}w$w").mkString(" "))
+      }
+    }
+    docs.toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("autoDfCap between floor and ceiling equals the df-histogram " +
+      "reference, and the histogram's Σ df·k is the gram-row count") {
+    val g = TextDedup.gids(spark, midDir, distinct = true)
+    val hist = g.groupBy("gid").agg(count(lit(1)).as("df"))
+      .groupBy("df").agg(count(lit(1)).as("k"))
+      .as[(Long, Long)].collect().sortBy(_._1)
+    val total = hist.map { case (df, k) => BigInt(df) * k }.sum
+    assert(total === BigInt(g.count()))
+    val budget = BigInt(TextDedup.PairBudget) * total
+    val cums = hist.scanLeft((0L, BigInt(0))) {
+      case ((_, c), (df, k)) => (df, c + BigInt(df) * df * k)
+    }.tail
+    val rawCap = cums.filter(_._2 <= budget).map(_._1)
+      .foldLeft(0L)(math.max)
+    val ref = math.min(TextDedup.MaxDfCap,
+      math.max(TextDedup.MinDfCap, rawCap))
+    assert(rawCap === 300L)
+    assert(ref > TextDedup.MinDfCap && ref < TextDedup.MaxDfCap)
+    assert(TextDedup.autoDfCap(g).collect()(0).getLong(0) === ref)
+  }
+
   test("d02 under the auto-cap: hub all-pairs are dropped, the 10 " +
       "engineered near-dup pairs all survive") {
     val got = graft.SparkEntry.queries("d02_ngram_jaccard")(
