@@ -9,15 +9,17 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
   * query N times in one session and prints two lines per query:
   * {{{
   * PROFILE <name> t1 t2 …                 seconds per rep, end to end
-  * COUNTS <name> build=b1,b2,… build_jobs=… jobs=j1,j2,… stages=… tasks=…
+  * COUNTS <name> build=b1,b2,… build_jobs=… jobs=j1,j2,… stages=… tasks=… fills=…
   * }}}
   * Rep 1 carries the one-shot cost (Catalyst, Janino codegen, AQE
   * re-plans, pin fills); reps 2+ are the steady state. `build` is the
   * seconds until `fn(spark, dir)` returned, which includes any job run
   * while the plan is built; `build_jobs` counts those jobs, and `jobs`
   * counts them too. The counts are the jobs, stages and tasks
-  * each rep scheduled; they depend on the plan shape, not the clock,
-  * which makes them the signal to read on a noisy box.
+  * each rep scheduled; `fills` counts the cached relations it created
+  * (RDDs holding blocks after the rep that held none before). They
+  * depend on the plan shape, not the clock, which makes them the
+  * signal to read on a noisy box.
   *
   * Environment: `SPARK_GRAFT_SF_DIR` (tables), `SPARK_GRAFT_CPUS`
   * (default 8, as in `Bench`), `SPARK_GRAFT_REPS` (default 3) and
@@ -34,9 +36,10 @@ object BenchProfile {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   /** One rep: end-to-end and construction seconds, the jobs run while
-    * the plan was built, and the jobs, stages and tasks it scheduled. */
+    * the plan was built, the jobs, stages and tasks it scheduled, and
+    * the cached relations it filled. */
   private[graft] final case class Rep(secs: Double, buildSecs: Double,
-      buildJobs: Long, jobs: Long, stages: Long, tasks: Long)
+      buildJobs: Long, jobs: Long, stages: Long, tasks: Long, fills: Long)
 
   /** Local property marking the jobs started while a query is built;
     * Spark copies it to every job the calling thread starts. */
@@ -92,6 +95,7 @@ object BenchProfile {
         tasks.incrementAndGet()
     }
     val sc = spark.sparkContext
+    def cachedIds(): Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet
     sc.addSparkListener(listener)
     try {
       GraftColumnBridge.drainListenerBus(sc)
@@ -99,6 +103,7 @@ object BenchProfile {
         val runs = (1 to reps).map { i =>
           val (b0, j0, s0, k0) =
             (buildJobs.get, jobs.get, stages.get, tasks.get)
+          val cached0 = cachedIds()
           val t0 = System.nanoTime()
           sc.setLocalProperty(PhaseKey, "build")
           val df = try fn(spark, sfDir)
@@ -107,6 +112,7 @@ object BenchProfile {
           df.write.format("noop").mode("overwrite").save()
           val t2 = System.nanoTime()
           GraftColumnBridge.drainListenerBus(sc)
+          val fills = (cachedIds() -- cached0).size.toLong
           // ONE query's reps can ENOSPC the scratch disk before the
           // post-query cleanup below ever runs: every rep re-shuffles
           // (a fresh action = fresh shuffle IDs — nothing is reused
@@ -120,12 +126,13 @@ object BenchProfile {
           // registry-held and survives GC.
           if (isolate && i < reps) System.gc()
           Rep((t2 - t0) / 1e9, (t1 - t0) / 1e9, buildJobs.get - b0,
-            jobs.get - j0, stages.get - s0, tasks.get - k0)
+            jobs.get - j0, stages.get - s0, tasks.get - k0, fills)
         }
         println(f"PROFILE $name%-28s ${runs.map(r => fmt(r.secs)).mkString(" ")}")
         def each(f: Rep => Any) = runs.map(f).mkString(",")
         println(s"COUNTS $name build=${each(r => fmt(r.buildSecs))} " +
-          s"build_jobs=${each(_.buildJobs)} jobs=${each(_.jobs)} stages=${each(_.stages)} tasks=${each(_.tasks)}")
+          s"build_jobs=${each(_.buildJobs)} jobs=${each(_.jobs)} stages=${each(_.stages)} tasks=${each(_.tasks)} " +
+          s"fills=${each(_.fills)}")
         if (isolate) {
           spark.catalog.clearCache()
           // the iterative drivers' last-round checkpoints never

@@ -68,7 +68,7 @@ object Sessions {
       // size — blocks sized by DATA volume, not by core count, which
       // is the same §2.2 sizing rule the shuffle partitions follow,
       // at any scale. Explicitly repartition(n, key)-ed pins
-      // (cappedGids/sizedGids's gid co-location) keep their
+      // (sizedGids's gid co-location) keep their
       // partitioning: AQE never coalesces a user-specified
       // repartition-by-num, so the exchange-free join design is
       // unaffected.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -16,16 +16,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Relation cache: one analyzed scan per (session, path). Re-creating
-  // the DataFrame per query re-lists files and re-reads the parquet
-  // footer on the driver — pure per-query latency that a long-lived
-  // session (or a catalog table at cluster scale) never pays. The
-  // logical plan is immutable, so sharing it across queries is safe.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    cache.computeIfAbsent((spark, s"$dir/$name.parquet"), { key =>
+  /** The table's relation, resolved once per (session, path). Re-creating
+    * the DataFrame per query re-lists files and re-infers the parquet
+    * schema in a Spark job — pure per-query latency that a long-lived
+    * session (or a catalog table at cluster scale) never pays. The
+    * analyzed plan is immutable, so sharing it across queries is safe.
+    * It is cached in the session's own catalog relation cache
+    * (`GraftColumnBridge.sessionRelation`), so it lives as long as the
+    * session and no longer: a released session's relations go with it. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    GraftColumnBridge.sessionRelation(spark, path) { () =>
       if (name == "events") {
         // events.ts is TIMESTAMP(NANOS) parquet, which Spark's vectorized
         // reader rejects; read it as a LongType of epoch-nanoseconds.
@@ -33,9 +34,10 @@ object Tables {
         // — float division loses precision at 1.7e18-ns magnitudes.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       }
-      val df = spark.read.parquet(key._2)
+      val df = spark.read.parquet(path)
       if (name == "events") normalizeEventTs(df) else df
-    })
+    }
+  }
 
   /** The engine-wide `events.ts` contract is epoch-NANOS BIGINT (every
     * consumer derives ms via `ts div 1000000`, matching the oracle's

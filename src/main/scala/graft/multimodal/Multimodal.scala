@@ -1728,7 +1728,7 @@ object Multimodal {
   def imageNearDups(media: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64,
       s"maxHamming must be in [0, 64), got $maxHamming")
-    // Pin (as d02/s06 do for cappedGids) so the heavy ImageIO decode
+    // Pin (as d02/s06 do for sizedGids) so the heavy ImageIO decode
     // runs once per blob by construction: both sides of the per-piece
     // self-join read the cached signatures, instead of relying on
     // exchange reuse that a broadcast decision would defeat.

@@ -16,6 +16,15 @@ import org.apache.spark.storage.StorageLevel
   * holds one entry per distinct pinned subtree. The engine's own loops
   * truncate their round state with a localCheckpoint instead, through
   * [[round]].
+  *
+  * The rule: pin a shared relation ONCE, at the relation its readers'
+  * warm path scans, and do not pin a builder relation whose only
+  * reader is another pin's fill. A pin under a pin caches the same
+  * rows twice and costs a fill job of its own, while the outer pin
+  * already serves every warm read; inside one fill, a relation read
+  * twice shares its exchange instead. The dedup family's gram index
+  * (`TextDedup.sizedGids`) and MinHash pair relation
+  * (`TextDedup.minhashPairs`) are each one pin over unpinned builders.
   */
 object Pin {
   /** Estimated-bytes ceiling above which a [[sized]] pin is

@@ -250,33 +250,35 @@ object SourceQueries {
       |  CAST(p.shared_grams AS DOUBLE) / n.n_grams AS overlap_frac
       |FROM p JOIN n ON p.eval_doc_id = n.doc_id
       |WHERE p.shared_grams >= 3""".stripMargin) { (s, dir) =>
-    // distinct grams per doc (overlap counts pairs of DISTINCT grams);
-    // the df-capped, pinned, gid-pre-partitioned gram relation is
-    // d02's OWN [[TextDedup.cappedGids]] — identical plan, so the
-    // cache manager dedups and the eval⋈train join below inherits the
-    // gid partitioning through the split/filter (exchange-free join).
-    val h = TextDedup.cappedGids(s, dir)
+    // distinct grams per doc (overlap counts pairs of DISTINCT grams):
+    // d02's OWN pinned gram index [[TextDedup.sizedGids]], df-capped
+    // and gid-pre-partitioned — identical plan, so a session that ran
+    // d02 serves it from cache, and the eval⋈train join below inherits
+    // the gid partitioning through the split/filter (exchange-free
+    // join). Its per-doc gram count n is the eval doc's size.
+    val h = TextDedup.sizedGids(s, dir)
     // the split rule is s02/s04's assignSplits — ONE definition of the
     // 80/20 hash bucket, so contamination queries can never drift from
     // the split they are supposed to audit
     val a = graft.operators.Sampling.assignSplits(
       h, col("doc_id"), Seq("train" -> 80, "eval" -> 100))
     val ev = a.filter(col("split") === "eval")
-      .select(col("doc_id").as("eval_doc_id"), col("gid"))
+      .select(col("doc_id").as("eval_doc_id"), col("gid"),
+        col("n").as("eval_grams"))
     val tr = a.filter(col("split") === "train")
       .select(col("doc_id").as("train_doc_id"), col("gid"))
-    val n = ev.groupBy("eval_doc_id").agg(count(lit(1)).as("eval_grams"))
     // candidate pairs ≈ unique (eval, train) groups — little map-side
     // reduction, so the pair agg is the widest stage; d02's
     // parallelism floor keeps it off one core when AQE's size-first
-    // coalescing sees a small exchange (no-op at scale)
+    // coalescing sees a small exchange (no-op at scale). eval_grams is
+    // a function of the pair, so `max` only carries it through.
     val par = Par.forInput(s, dir, "documents")
     ev.join(tr, "gid")
       .repartition(par, col("eval_doc_id"), col("train_doc_id"))
       .groupBy("eval_doc_id", "train_doc_id")
-      .agg(count(lit(1)).as("shared_grams"))
+      .agg(count(lit(1)).as("shared_grams"),
+        max("eval_grams").as("eval_grams"))
       .filter(col("shared_grams") >= 3)
-      .join(n, "eval_doc_id")
       .select(col("eval_doc_id"), col("train_doc_id"),
         col("shared_grams"), col("eval_grams"),
         (col("shared_grams").cast(DoubleType) / col("eval_grams"))
@@ -810,7 +812,7 @@ object SourceQueries {
   // quarantine set cannot drift from the detector.
   //
   // Scale shape: s06's audited inverted-index join does the heavy
-  // work (shared cappedGids pin); the apply adds one eval-doc-grain
+  // work (shared sizedGids pin); the apply adds one eval-doc-grain
   // hit agg and one broadcast-ready left join onto the corpus scan.
   // Docs too short to shingle (<3 tokens) never contaminate by
   // construction and keep their split — the left join's null side.
@@ -1149,13 +1151,13 @@ object SourceQueries {
       |WHERE a.split = 'train' GROUP BY a.doc_id""".stripMargin) {
       (s, dir) =>
     val a = graft.operators.Sampling.assignSplits(
-      TextDedup.cappedGids(s, dir), col("doc_id"),
+      TextDedup.sizedGids(s, dir).select("doc_id", "gid"), col("doc_id"),
       Seq("train" -> 80, "eval" -> 100))
     // ONE pinned distinct eval-gid relation serves all three
     // consumers (guide §2.4 "two operations keyed the same way share
     // one exchange"): the filter's sizing count, the sketch build,
     // and the exact arm's membership join below previously each ran
-    // their own distinct aggregation over the capped-gid pin — the
+    // their own distinct aggregation over the gram-index pin — the
     // sizing count now materializes this pin and the other two read
     // cache. expectDistinct skips buildFilter's internal re-dedup
     // (cache substitution happens after redundant-aggregate
@@ -1172,7 +1174,7 @@ object SourceQueries {
     // scan stays inside whole-stage codegen, no ScalaUDF hop
     val hit = graft.streaming.DecontamGate.mightContain(bloom, col("gid"))
     // exact arm: both sides descend from the gid-partitioned
-    // cappedGids pin, so the eval-distinct + membership join align
+    // sizedGids pin, so the eval-distinct + membership join align
     // without a fresh corpus shuffle
     val perDoc = Pin(a.filter(col("split") === "train")
       .join(evalDistinct.withColumn("in_eval", lit(1L)),

@@ -103,9 +103,9 @@ object TextDedup {
 
   /** The auto-cap as a 1-row `(cap)` DataFrame over a distinct
     * `(doc_id, gid)` relation — same arithmetic as [[capSql]].
-    * Scale shape: df agg runs on the gid-partitioned pin
-    * (exchange-free), the histogram collapses to df-VALUE grain
-    * before the global-order window, so the single-task window sees
+    * Scale shape: the df agg shuffles index rows (16 B) by gid, and
+    * the histogram collapses to df-VALUE grain before the
+    * global-order window, so the single-task window sees
     * at most |distinct df values| rows — bounded by max df, not by
     * corpus size. The corpus total |gram occurrences| = Σ df·k comes
     * out of the same window stage (an unbounded frame on the same
@@ -127,68 +127,77 @@ object TextDedup {
         greatest(lit(MinDfCap), col("rawcap"))).as("cap"))
   }
 
-  /** The pre-cap pinned inverted index: [[gids]](distinct = true)
-    * repartitioned by gid. Shared by [[cappedGids]] (which builds the
-    * hot-gram filter on top) and d16's tier count — both construct
-    * the identical plan, so the cache manager serves one entry. */
-  private[graft] def pinnedGids(s: SparkSession, dir: String): DataFrame = {
+  /** The pre-cap inverted index: [[gids]](distinct = true)
+    * repartitioned by doc_id. Unpinned: its readers are the hub-gram
+    * list and the size annotation inside the [[sizedGids]] fill, and
+    * all of them read this one doc_id exchange, so the shingle pass
+    * runs once per fill without a pin of its own. */
+  private def gramIndex(s: SparkSession, dir: String): DataFrame = {
     val par = Par.forInput(s, dir, "documents")
-    Pin(gids(s, dir, distinct = true)
-      .repartition(par, col("gid")))
+    gids(s, dir, distinct = true).repartition(par, col("doc_id"))
   }
+
+  /** [[gramIndex]], pinned, for d16's pre-cap tier count (the one
+    * reader that scans the index before the df cap). The pin's plan is
+    * a subtree of the [[sizedGids]] fill, so when d16 counts first the
+    * fill reads the pre-cap index from this cache. */
+  private[graft] def pinnedGids(s: SparkSession, dir: String): DataFrame =
+    Pin(gramIndex(s, dir))
 
   /** Docs eligible for shingle-grain dedup = docs with ≥3 tokens =
     * distinct doc_ids in [[pinnedGids]] (a ≥3-token doc has ≥1
     * shingle; explode drops empty arrays). Counting off the pin means
-    * the tier decision's scalar costs a cache fill that every
-    * downstream detector reuses — NOT an extra corpus scan. */
+    * the tier decision's scalar costs a cache fill that the
+    * [[sizedGids]] fill then reads — NOT an extra corpus scan. */
   private[graft] def eligibleDocCount(s: SparkSession, dir: String): Long =
     pinnedGids(s, dir).agg(countDistinct(col("doc_id")))
       .head().getLong(0)
 
-  /** The pinned, df-capped, gid-PRE-PARTITIONED distinct-gram relation
-    * `(doc_id, gid)` shared by d02 and s06 (ONE definition → identical
-    * plans → the persist cache manager dedups, so in a long-lived
-    * session both queries read the same blocks).
-    *
-    * Pre-partitioning by gid before the pin is the load-bearing part:
-    * every downstream consumer either aggregates on gid (the hot-list)
-    * or joins on gid (d02's self-join, s06's eval⋈train join), and the
-    * cached blocks carry `HashPartitioning(gid)` through the cache —
-    * the joins and the hot-list agg all run exchange-free. That is the
-    * 100 TB co-location strategy (partition the inverted index by its
-    * join key ONCE, reuse it across every dedup pass) and at sf0.1 it
-    * removes three exchanges from the steady-state path.
-    *
-    * The hub-gram (df > [[autoDfCap]]) anti-join runs BEFORE the
-    * second pin: the hot list is tiny at any scale (it is the skew,
-    * by definition) → broadcast anti-join, which preserves the
-    * streamed side's gid partitioning. The cap itself is a 1-row
-    * broadcast (the t10 corpus-total pattern) — deriving it adds
-    * df-histogram-grain work only, never a corpus-grain pass beyond
-    * the df agg the hot list already paid. */
-  private[queries] def cappedGids(
-      s: SparkSession, dir: String): DataFrame = {
-    val g = pinnedGids(s, dir)
-    val hot = g.groupBy("gid").agg(count(lit(1)).as("df"))
+  /** The hub grams of a pre-cap index `g`, `(gid, hub = true)`: the
+    * grams whose document frequency exceeds [[autoDfCap]]. The list is
+    * tiny at any scale (it is the skew, by definition), so it is
+    * broadcast; the cap itself is a 1-row broadcast (the t10
+    * corpus-total pattern) — deriving it adds df-histogram-grain work
+    * only, never a corpus-grain pass beyond the df agg the list pays. */
+  private def hubGrams(g: DataFrame): DataFrame =
+    g.groupBy("gid").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(autoDfCap(g)))
-      .filter(col("df") > col("cap")).select("gid")
-    Pin(g.join(broadcast(hot), Seq("gid"), "left_anti")
-      .select("doc_id", "gid")) // join key moves first; restore order
-  }
+      .filter(col("df") > col("cap"))
+      .select(col("gid"), lit(true).as("hub"))
 
-  /** Size-ANNOTATED inverted index (PPJoin, Xiao et al. 2008): each
-    * [[cappedGids]] row carries its doc's post-cap gram count n.
-    * Costs one doc_id exchange + the restore-gid exchange — both at
-    * INDEX grain (16 B rows), an order of magnitude below the
-    * candidate sets they optimize. Pinned and SHARED (d02's self-join
-    * reads it twice, d15 twice more — one definition → one cache
-    * entry). */
+  /** The pinned gram index `(doc_id, gid, n)`: the df-capped distinct
+    * grams ([[gramIndex]] less its [[hubGrams]]), each row carrying its
+    * doc's post-cap gram count n (the size annotation of PPJoin, Xiao
+    * et al. 2008). ONE pin for every gram-grain reader: the pair joins
+    * of d02, d09, d15 and d16, and s06, s16 and s19 through a
+    * projection — one definition → identical plans → one cache entry,
+    * so a session that ran d02 serves s06 from cache.
+    *
+    * The hub grams are flagged by a broadcast left join and dropped
+    * after the size window, not anti-joined: Catalyst pushes an
+    * anti-join below the doc_id repartition, which would give the
+    * stream side an exchange of its own and run the shingle pass a
+    * second time whenever the hub list is non-empty. The doc_id
+    * partitioning carries through the broadcast join, so the size
+    * window needs no exchange.
+    *
+    * Re-partitioning by gid before the pin is the load-bearing part:
+    * every reader joins on gid (the pair self-join, s06's eval⋈train
+    * join, s19's membership join), and the cached blocks carry
+    * `HashPartitioning(gid)` through the cache, so those joins run
+    * exchange-free — the 100 TB co-location strategy (partition the
+    * inverted index by its join key ONCE, reuse it across every dedup
+    * pass). The fill pays two INDEX-grain exchanges (16 B rows), on
+    * doc_id and then on gid, an order of magnitude below the candidate
+    * sets they serve. */
   private[queries] def sizedGids(s: SparkSession, dir: String): DataFrame = {
     val par = Par.forInput(s, dir, "documents")
-    Pin(cappedGids(s, dir)
-      .withColumn("n",
-        count(lit(1)).over(Window.partitionBy("doc_id")))
+    val g = gramIndex(s, dir)
+    Pin(g.join(broadcast(hubGrams(g)), Seq("gid"), "left")
+      .withColumn("n", count(when(col("hub").isNull, 1))
+        .over(Window.partitionBy("doc_id")))
+      .filter(col("hub").isNull)
+      .select("doc_id", "gid", "n")
       .repartition(par, col("gid")))
   }
 
@@ -248,7 +257,7 @@ object TextDedup {
   // 8-byte longs instead of ~25-byte strings (both engines hash with
   // the same md5 prefix, so any collision collapses identically on
   // both sides). Hub shingles would skew the self-join at scale, so
-  // the self-join reads [[cappedGids]]' df-capped grams.
+  // the self-join reads [[sizedGids]]' df-capped grams.
   val d02 = Q(
     "d02_ngram_jaccard",
     s"""$gidsCte,
@@ -266,16 +275,13 @@ object TextDedup {
       |       JOIN n nb ON p.doc_b = nb.doc_id
       |WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= $JaccardMin""".stripMargin) {
     (s, dir) =>
-      // document-frequency cap + pins live in [[cappedGids]] (shared
-      // with s06): a hub shingle appearing in >cap docs would square
-      // into >500k candidate pairs on ONE shuffle key — the standard
+      // the document-frequency cap lives in the one pinned gram index
+      // [[sizedGids]] (shared with d09, d15, d16, s06, s16 and s19): a
+      // hub shingle appearing in >cap docs would square into >500k
+      // candidate pairs on ONE shuffle key — the standard
       // capped-Jaccard guard, mirrored in the oracle so both engines
-      // drop the same grams. The relation fans out FOUR ways here
-      // (both self-join sides + the two doc-size joins); unpinned,
-      // each consumer re-runs the shingle pass and the anti-join —
-      // the plan audit showed 4× the df-cap shuffle, which dominated
-      // d02's data path. Its gid pre-partitioning makes the self-join
-      // exchange-free.
+      // drop the same grams. Both self-join sides read the pin, and
+      // its gid partitioning makes the self-join exchange-free.
       //
       // The size filter runs BEFORE the pair shuffle: J ≥ t forces
       // min(na,nb) ≥ t·max(na,nb) (inter ≤ min and
@@ -339,17 +345,18 @@ object TextDedup {
     167772161L -> 97531L, 1224736769L -> 24680L,
     1051721729L -> 86420L, 1107296257L -> 11111L)
 
-  /** d03's frame: banded candidate pairs + minhash-agreement estimate
-    * (also the edge generator for d07's cluster assignment). */
+  /** d03's frame, pinned: banded candidate pairs + minhash-agreement
+    * estimate (also the edge generator for d07's cluster assignment). */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
       val h = gids(s, dir, distinct = false)
         .select(col("doc_id"), (col("gid") % 2147483647L).as("x"))
       val mins = (0 to 7).map(k =>
         min((lit(MhMix(k)._1) * col("x") + lit(MhMix(k)._2))
           % 2147483647L).as(s"m$k"))
-      // one row per doc, read by both sides of the band join — pin it
-      // so the shingle+hash pass runs once
-      val sig = Pin(h.groupBy("doc_id").agg(mins.head, mins.tail: _*))
+      // one row per doc, read by both sides of the band join; the two
+      // sides share the signature aggregation's exchange, so the
+      // shingle+hash pass runs once without a pin of its own
+      val sig = h.groupBy("doc_id").agg(mins.head, mins.tail: _*)
       // ONE band join instead of four: explode each signature to
       // (doc_id, m0..m7, band, band_key) rows and self-equi-join on
       // (band, band_key). The key m_even·(2³¹−1)+m_odd is a
@@ -369,18 +376,23 @@ object TextDedup {
       val matches = (0 to 7)
         .map(k => when(col(s"a$k") === col(s"b$k"), 1).otherwise(0))
         .reduce(_ + _)
-      // The left input is never broadcast. Both inputs read the same
-      // pin; on a cold pin AQE would otherwise broadcast whichever
-      // side's cache stage finished first, so the build side, and with
-      // it the join's generated class, changed from one invocation to
-      // the next.
-      GraftColumnBridge.noBroadcast(side("doc_a", "a"))
+      // The left input is never broadcast. Both inputs are the same
+      // relation, so their sizes tie; without the hint the build side,
+      // and with it the join's generated class, could change from one
+      // invocation to the next with the order AQE sees their stages
+      // finish.
+      //
+      // The pair relation is the pin: d03 returns it, and d07, d09, d10
+      // and d16 read it (d07/d10 through connectedComponents' bounded
+      // collect), so a session that ran any of them serves the others
+      // from this one cache entry.
+      Pin(GraftColumnBridge.noBroadcast(side("doc_a", "a"))
         .join(side("doc_b", "b"), Seq("band", "bkey"))
         .filter(col("doc_a") < col("doc_b"))
         .select(col("doc_a"), col("doc_b"),
           matches.as("n_matching_minhashes"))
         .distinct()
-        .withColumn("est_jaccard", col("n_matching_minhashes") / lit(8.0))
+        .withColumn("est_jaccard", col("n_matching_minhashes") / lit(8.0)))
   }
 
   val d03 = Q(
@@ -476,9 +488,10 @@ object TextDedup {
       |      (SELECT COUNT(*) FROM cand) END AS lsh_precision""".stripMargin) {
     (s, dir) =>
       // both frames feed two consumers (their count + the hit join):
-      // pin so d02's pair aggregation and d03's band join run once
+      // truth is pinned so d02's pair aggregation runs once; cand reads
+      // the pinned minhashPairs relation, so d03's band join runs once
       val truth = Pin(d02.run(s, dir).select("doc_a", "doc_b"))
-      val cand = Pin(minhashPairs(s, dir).select("doc_a", "doc_b"))
+      val cand = minhashPairs(s, dir).select("doc_a", "doc_b")
       val hits = truth.join(cand, Seq("doc_a", "doc_b"))
       truth.agg(count(lit(1)).as("n_true_pairs"))
         .crossJoin(cand.agg(count(lit(1)).as("n_candidate_pairs")))
@@ -1248,9 +1261,9 @@ object TextDedup {
     // tier decision: ONE scalar driver sync (the d14 auto-k
     // precedent). It has to be plan-time: the two tiers differ in
     // JOIN STRUCTURE, which no runtime column can switch without
-    // executing both arms. Served from the shared gids pin (filling
-    // the cache every detector below reads) — no dedicated corpus
-    // scan for the scalar.
+    // executing both arms. Served from the pre-cap index pin
+    // ([[pinnedGids]]), whose cache the sizedGids fill below then
+    // reads — no dedicated corpus scan for the scalar.
     val nd = eligibleDocCount(s, dir)
     val scored =
       if (nd <= EnsembleExactMax) {

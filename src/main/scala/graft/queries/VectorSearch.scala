@@ -125,7 +125,7 @@ object VectorSearch {
     * the composed reports v14/v18 paid it once per embedded method).
     * One definition → identical canonical plan → the session's cache
     * manager serves every consumer from one entry, the
-    * [[graft.queries.TextDedup.cappedGids]] convention applied to the
+    * [[graft.queries.TextDedup.sizedGids]] convention applied to the
     * vector side. Consumers needing fewer columns project the cache
     * (InMemoryTableScan prunes). */
   private def eFrame(s: SparkSession, dir: String): DataFrame =
@@ -156,16 +156,12 @@ object VectorSearch {
 
   /** Spark twin of [[coarseAssignCtes]]: (q_id, label, ds). */
   private def coarseDistances(emb: DataFrame): DataFrame = {
-    val ex = emb.select(col("label"),
-      posexplode(col("embedding")).as(Seq("pos0", "x")))
-    // pinned: (label × dim)-bounded output of a corpus-grain agg,
-    // shared by v02 and v04 in the same session (r11 — each paid its
-    // own centroid pass before)
-    val cm = graft.operators.Pin(ex.groupBy("label", "pos0")
-      .agg(sum(round(col("x").cast(DoubleType) * 1e9).cast(LongType))
-        .as("sxs"), count(lit(1)).as("c"))
+    // the centroid means are a projection of the one pinned codebook
+    // aggregate, so v02, v04 and the quantizers (v07-v10, v17) share
+    // one corpus pass and one cache entry in a session
+    val cm = codebookSums(emb)
       .select(col("label"), col("pos0"),
-        (col("sxs").cast(DoubleType) / (col("c") * lit(1e9))).as("m")))
+        (col("sxs").cast(DoubleType) / (col("c") * lit(1e9))).as("m"))
     val qx = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"),
         posexplode(col("embedding")).as(Seq("pos0", "x")))
@@ -260,7 +256,7 @@ object VectorSearch {
     // the optimizer must be free to shuffle on bucket at scale. The
     // corpus side is never broadcast: both sides read the eFrame pin,
     // and on a cold pin AQE would otherwise broadcast whichever side's
-    // cache stage finished first (TextDedup.minhashPairs' race)
+    // cache stage finished first
     GraftColumnBridge.noBroadcast(eb).join(q,
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
@@ -676,10 +672,10 @@ object VectorSearch {
   /** The codebook's exact scaled-integer sums per (label, dim):
     * `(label, pos0, sxs, c)`, the oracle's `cen` CTE. Pinned: the
     * relation is (labels × dims) rows but its build is a corpus-grain
-    * posexplode+agg — v07-v10 and v17 each read it per invocation and
-    * v18 embeds two of them, so without the pin the corpus pass
-    * re-ran per caller (the collect itself stays |labels·dims|-bounded
-    * driver sync). */
+    * posexplode+agg — v07-v10 and v17 each read it per invocation, v18
+    * embeds two of them, and v02/v04 project their centroid means from
+    * it, so without the pin the corpus pass re-ran per caller (the
+    * collect itself stays |labels·dims|-bounded driver sync). */
   private def codebookSums(emb: DataFrame): DataFrame =
     graft.operators.Pin(emb
       .select(col("label"),

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.catalyst.QualifiedTableName
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, NO_BROADCAST_HASH, ResolvedHint}
 
@@ -39,5 +40,24 @@ object GraftColumnBridge {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     classic.Dataset.ofRows(ds.sparkSession, ResolvedHint(ds.logicalPlan,
       HintInfo(strategy = Some(NO_BROADCAST_HASH))))
+  }
+
+  /** A DataFrame over `build()`'s analyzed plan, built once per
+    * (session, `key`) and cached in the session catalog's relation
+    * cache, the per-session cache Spark keeps for catalog tables
+    * (`SessionCatalog.getCachedPlan`, bounded by
+    * `spark.sql.filesourceTableRelationCacheSize`). The entry is
+    * reachable only from its session, so it goes when the session does;
+    * a JVM-wide map would keep every session it has seen, since the
+    * cached plan references its session. The key's catalog name
+    * (`graft`) is not a registered catalog, so no table lookup can
+    * resolve to it. */
+  def sessionRelation(spark: SparkSession, key: String)(
+      build: () => DataFrame): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val plan = s.sessionState.catalog.getCachedPlan(
+      QualifiedTableName("graft", "relation", key),
+      () => build().asInstanceOf[classic.Dataset[Row]].logicalPlan)
+    classic.Dataset.ofRows(s, plan)
   }
 }

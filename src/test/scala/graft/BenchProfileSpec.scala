@@ -28,37 +28,58 @@ class BenchProfileSpec extends SparkTestBase {
 
   test("cold first reps keep their audited construction and total job " +
       "counts for d03, d07, d10, g01 and g02") {
-    // A job coming back (a second action in a size gate, a re-join, a
-    // global aggregate broadcast back) is a fixed per-job cost on every
-    // cold invocation. Counted in a fresh session (the Sessions.local
-    // config, no runtime conf drift from earlier suites) whose cache
-    // starts empty and is cleared after each query.
+    // Also d02, d09, d15 and s06, the gram-index and MinHash readers;
+    // and d02, d03 and d07 each fill exactly one pin. A job coming back
+    // (a second action in a size gate, a re-join, a global aggregate
+    // broadcast back, a pin re-stacked under a pin) is a fixed per-job
+    // cost on every cold invocation. Counted in a fresh
+    // session (the Sessions.local config, no runtime conf drift from
+    // earlier suites) whose cache starts empty and is cleared after
+    // each query.
     // (construction jobs, total jobs) of rep 1:
-    //  d03: sig pin fill + band join + pair distinct; no construction
-    //  d07: d03's chain under one bounded collect that fills the edge
-    //       pin and gates the in-process union-find
+    //  d02: the one gram-index pin fill (sizedGids) + the pair join
+    //  d03: the one pair-relation pin fill (minhashPairs); no
+    //       construction
+    //  d07: the pair relation filled by components' bounded collect,
+    //       which gates the in-process union-find
+    //  d09: d02's truth pin + the pair relation + the three counts
     //  d10: d07's construction + the per-source report
+    //  d15: d02's gram index + its own pair aggregation
     //  g01: the nodes pin's entry pick + reachable's bounded collect
     //  g02: the degrees aggregation over the pinned distinct edges
+    //  s06: the gram index it shares with d02 + the eval⋈train pairs
     val audited = Seq(
-      "d03_minhash_lsh" -> ((0L, 5L)),
-      "d07_components" -> ((6L, 8L)),
-      "d10_dedup_apply" -> ((6L, 9L)),
+      "d02_ngram_jaccard" -> ((0L, 9L)),
+      "d03_minhash_lsh" -> ((0L, 4L)),
+      "d07_components" -> ((4L, 6L)),
+      "d09_lsh_quality" -> ((0L, 17L)),
+      "d10_dedup_apply" -> ((4L, 7L)),
+      "d15_containment" -> ((0L, 9L)),
       "g01_reachability" -> ((7L, 9L)),
-      "g02_fanout_fanin" -> ((0L, 7L)))
+      "g02_fanout_fanin" -> ((0L, 7L)),
+      "s06_decontamination" -> ((0L, 9L)))
+    // cached relations each rep creates: one pin per shared relation
+    val fills = Seq(
+      "d02_ngram_jaccard" -> 1L,
+      "d03_minhash_lsh" -> 1L,
+      "d07_components" -> 1L)
     val s = spark.newSession()
     s.sharedState.cacheManager.clearCache()
     // the session's table relations resolve once, outside the counts
     // (as in BenchProfile.main)
     Tables.names.foreach(Tables.load(s, dir, _))
     try {
-      val got = BenchProfile.profile(s, dir,
+      val reps = BenchProfile.profile(s, dir,
         audited.map { case (n, _) => n -> SparkEntry.queries(n) },
-        reps = 1, isolate = true)
-        .map { case (n, reps) => n -> ((reps.head.buildJobs, reps.head.jobs)) }
-      println(s"JOB_AUDIT (build, total): $got")
+        reps = 1, isolate = true).toMap.map { case (n, r) => n -> r.head }
+      val got = audited.map { case (n, _) =>
+        n -> ((reps(n).buildJobs, reps(n).jobs)) }
+      val gotFills = fills.map { case (n, _) => n -> reps(n).fills }
+      println(s"JOB_AUDIT (build, total): $got fills: $gotFills")
       assert(got === audited, "a cold rep's job count moved — re-audit " +
         "deliberately or remove the job that came back")
+      assert(gotFills === fills, "a shared dedup relation filled more " +
+        "than one pin — a builder relation was pinned under its reader")
     } finally s.sharedState.cacheManager.clearCache()
   }
 }

@@ -183,13 +183,19 @@ class PlanAuditSpec extends SparkTestBase {
     // remaining exchanges are the data-path aggs, the part that grows
     // with the corpus):
     //  q03/q05: dims broadcast, ONE agg exchange                  -> 1
-    //  d02: cappedGids cache build pays the gid repartition + the
-    //       hot-list agg (counted once, inside the cache); outside:
-    //       the pair-agg repartition + one doc-size agg exchange  -> 4
-    //  s06: REUSES d02's cached gid relation (cache hit = 0 inside;
-    //       the audit runs d02 first to make attribution
-    //       deterministic); its own pair repartition + eval-size
-    //       agg + final report exchange                           -> 3
+    //  d02: the walk descends the one gram-index pin (sizedGids)
+    //       once; its fill pays the pre-cap index's doc_id
+    //       repartition (which the hub-gram list reads too; AQE drops
+    //       the hub branch when the list is empty, as at this SF) and
+    //       the gid repartition the readers join on; outside: the
+    //       pair-agg repartition                                  -> 3
+    //       (4 while the pre-cap and capped relations were pins of
+    //       their own: the pre-cap gid repartition, then the size
+    //       annotation's doc_id and gid exchanges)
+    //  s06: reads a projection of the same pin (a cache hit at run
+    //       time, d02 having run first; the walk still descends its
+    //       fill: 2); its own pair repartition; eval_grams is the
+    //       index's n, so no eval-size agg                        -> 3
     // round-6 additions (audited 2026-08-13, VERDICT r5 ask #1):
     //  t10: pinned (doc,token,count) cache build pays its groupBy;
     //       outside: vocab agg + 1-row corpus total + the Zipf-
@@ -204,7 +210,7 @@ class PlanAuditSpec extends SparkTestBase {
     //       as literals)                                          -> 0
     spark.sharedState.cacheManager.clearCache()
     val audited = Seq(
-      "d02_ngram_jaccard" -> 4,
+      "d02_ngram_jaccard" -> 3,
       "s06_decontamination" -> 3,
       "q03_revenue_by_nation" -> 1,
       "q05_region_revenue" -> 1,
@@ -320,14 +326,14 @@ class PlanAuditSpec extends SparkTestBase {
       //       spine + report joins — is queries×k-bounded
       "v14_retrieval_metrics" -> 13,
       //  round-7 additions (audited 2026-08-14):
-      //  d15: the tree walk re-descends the shared sizedGids/
-      //       cappedGids build (3 exchanges — paid ONCE at runtime,
-      //       by whichever of d02/d15 runs first; a cache hit for
-      //       the other) + its own pair repartition, whose
-      //       partitioning the pair agg then reuses. Mirrors d02's 4
-      //       by construction — the two counts regress together if
-      //       the shared pin definitions diverge                  -> 4
-      "d15_containment" -> 4,
+      //  d15: the tree walk re-descends the shared sizedGids
+      //       fill (2 exchanges — paid ONCE at runtime, by whichever
+      //       of d02/d15 runs first; a cache hit for the other) + its
+      //       own pair repartition, whose partitioning the pair agg
+      //       then reuses. Mirrors d02's 3 by construction — the two
+      //       counts regress together if the shared pin definitions
+      //       diverge                                              -> 3
+      "d15_containment" -> 3,
       //  s14: the chunker is pure narrow compute (split, sequence
       //       explode, slice) — ZERO shuffle at any corpus size; any
       //       exchange here is a regression of the operator's whole
@@ -345,13 +351,12 @@ class PlanAuditSpec extends SparkTestBase {
       //       crept back into the distributed plan                -> 0
       "v15_mmr_diversify" -> 0,
       //  d16: the walk re-descends the four members' audited trees
-      //       (d02-equivalent capped-gid pipeline, d15's pair
+      //       (the shared gram-index fill, d15's pair
       //       repartition, d03's sig agg + band join, d04's simhash
       //       agg + piece join + distinct) plus the ONE thing d16
       //       itself adds: the flagged-pair-grain consensus groupBy.
-      //       (Shared pins — capped gids, sizedGids — count once via
-      //       the walk's distinct-cache dedup and cache hits from
-      //       earlier audited queries.) Growth here without a member
+      //       (The shared gram-index pin counts once via the walk's
+      //       distinct-cache dedup.) Growth here without a member
       //       regressing means the consensus stopped being a single
       //       union+agg. Round 9: d04's auto-width member audits at
       //       d12's exact shape (its width derivation is a
@@ -363,10 +368,12 @@ class PlanAuditSpec extends SparkTestBase {
       //       shared pair-score relation (the oracle's pj CTE), so
       //       one of the two identical pair-repartition exchanges
       //       disappeared                                          -> 7
-      "d16_ensemble_dups" -> 7,
-      //  s16: s06's audited pipeline underneath (pair repartition +
-      //       eval-size agg + report agg = 3, with cappedGids cache
-      //       hits from d02's earlier audit) + the apply's own
+      //       7 -> 6 — the gram index is one pin (sizedGids) over a
+      //       doc_id-partitioned pre-cap index, so its fill pays 2
+      //       exchanges, not 3                                     -> 6
+      "d16_ensemble_dups" -> 6,
+      //  s16: s06's audited pipeline underneath (the gram-index fill
+      //       + pair repartition = 3) + the apply's own
       //       quarantine-hit agg and NOTHING else — the corpus left
       //       join BROADCASTS the hit set                          -> 4
       "s16_decontaminate_apply" -> 4,
@@ -455,20 +462,24 @@ class PlanAuditSpec extends SparkTestBase {
       //       the ABSENCE of a |queries|-partition corpus sort —
       //       that is what the shard level exists to prevent
       "v19_hard_negatives" -> 3,
-      //  s19: the shared cappedGids relation is a cache hit here
-      //       (d02's earlier audit materialized it — s06's own
-      //       convention); s19's OWN exchanges are the eval-gram
-      //       distinct, the per-train-doc agg (probe + exact arms in
-      //       ONE grouping), and the 1-row fp-bound combine that the
-      //       r11 bounded-error oracle row added (VERDICT r10 ask
-      //       #6) — the exact-arm membership join itself aligns on
-      //       cappedGids' gid partitioning, exchange-free. The Bloom
-      //       build + sizing count pay in driver jobs (v08's codebook
-      //       pattern); the production screen (DecontamGate.screen)
-      //       remains the zero-join broadcast-sketch probe — a 4th
-      //       exchange here means the audit join stopped aligning
-      //       and the corpus is being shuffled
-      "s19_bloom_decontaminate" -> 3,
+      //  s19: reads a projection of the shared gram-index pin (a
+      //       cache hit at run time after d02/s06; the walk descends
+      //       its fill: 2 exchanges); s19's OWN exchanges are the
+      //       per-train-doc agg (probe + exact arms in ONE grouping)
+      //       and the 1-row fp-bound combine that the r11
+      //       bounded-error oracle row added (VERDICT r10 ask #6) —
+      //       the eval-gram distinct and the exact-arm membership
+      //       join align on the index's gid partitioning,
+      //       exchange-free. The Bloom build + sizing count pay in
+      //       driver jobs (v08's codebook pattern); the production
+      //       screen (DecontamGate.screen) remains the zero-join
+      //       broadcast-sketch probe. 3 -> 4 when s19 moved from the
+      //       pre-cap index pin (one gid repartition) to the
+      //       size-annotated index every gram reader shares (its
+      //       doc_id exchange is the +1). A 5th exchange here means
+      //       the audit join stopped aligning and the corpus is being
+      //       shuffled
+      "s19_bloom_decontaminate" -> 4,
       //  t16: t08's own audited tail in the returned plan (vocab agg
       //       + per-source rank window); the per-source sketch agg
       //       pays in the |sources|-bounded driver-collect job, and
@@ -537,7 +548,8 @@ class PlanAuditSpec extends SparkTestBase {
       assert(nd === expected,
         "tier count off the pin diverged from the tokenized-filter " +
           "semantics the oracle mirrors")
-      // the scalar registered the SAME pin cappedGids/sizedGids read
+      // the scalar registered the pre-cap index pin, whose plan is a
+      // subtree of the sizedGids fill (so that fill then reads it)
       val pinned = queries.TextDedup.pinnedGids(spark, dir)
       assert(spark.sharedState.cacheManager
         .lookupCachedData(
