@@ -198,7 +198,10 @@ object GraphOps {
     * LABELS frame (node-grain, small next to the edge join), a cost
     * shallow graphs barely notice.
     *
-    * `edges` needs `src`/`dst` columns of one orderable type. Returns
+    * `edges` needs `src`/`dst` columns of one orderable type. It is
+    * read by the size gate and, above the gate, by both halves of the
+    * symmetrized loop relation, so pin an expensive edge plan before
+    * passing it (d07/d10's is a filter over a pinned relation). Returns
     * `(id, component)` for every node incident to at least one edge,
     * `component` = min id in the node's component. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame =
