@@ -17,7 +17,9 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
   * while the plan is built; `build_jobs` counts those jobs, and `jobs`
   * counts them too. The counts are the jobs, stages and tasks
   * each rep scheduled; `fills` counts the cached relations it created
-  * (RDDs holding blocks after the rep that held none before). They
+  * (persisted RDDs holding blocks after the rep that held none before,
+  * less the loops' round checkpoints, which are locally checkpointed
+  * RDDs, not cached relations). They
   * depend on the plan shape, not the clock, which makes them the
   * signal to read on a noisy box.
   *
@@ -95,7 +97,11 @@ object BenchProfile {
         tasks.incrementAndGet()
     }
     val sc = spark.sparkContext
-    def cachedIds(): Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet
+    def cachedIds(): Set[Int] = {
+      val rounds = sc.getPersistentRDDs.collect {
+        case (id, rdd) if rdd.isCheckpointed => id }.toSet
+      sc.getRDDStorageInfo.map(_.id).toSet -- rounds
+    }
     sc.addSparkListener(listener)
     try {
       GraftColumnBridge.drainListenerBus(sc)

@@ -25,6 +25,11 @@ import org.apache.spark.storage.StorageLevel
   * twice shares its exchange instead. The dedup family's gram index
   * (`TextDedup.sizedGids`) and MinHash pair relation
   * (`TextDedup.minhashPairs`) are each one pin over unpinned builders.
+  * One exception: d16's tier count pins the pre-cap index
+  * (`TextDedup.pinnedGids`), because the df cap drops the docs whose
+  * grams are all hubs and the count must include them. A cold d16 then
+  * fills the gram index from that cache, but a session that already
+  * holds `sizedGids` fills it for the count alone.
   */
 object Pin {
   /** Estimated-bytes ceiling above which a [[sized]] pin is

@@ -1151,13 +1151,13 @@ object SourceQueries {
       |WHERE a.split = 'train' GROUP BY a.doc_id""".stripMargin) {
       (s, dir) =>
     val a = graft.operators.Sampling.assignSplits(
-      TextDedup.sizedGids(s, dir).select("doc_id", "gid"), col("doc_id"),
+      TextDedup.cappedGids(s, dir), col("doc_id"),
       Seq("train" -> 80, "eval" -> 100))
     // ONE pinned distinct eval-gid relation serves all three
     // consumers (guide §2.4 "two operations keyed the same way share
     // one exchange"): the filter's sizing count, the sketch build,
     // and the exact arm's membership join below previously each ran
-    // their own distinct aggregation over the gram-index pin — the
+    // their own distinct aggregation over the capped-gram pin — the
     // sizing count now materializes this pin and the other two read
     // cache. expectDistinct skips buildFilter's internal re-dedup
     // (cache substitution happens after redundant-aggregate
@@ -1174,7 +1174,7 @@ object SourceQueries {
     // scan stays inside whole-stage codegen, no ScalaUDF hop
     val hit = graft.streaming.DecontamGate.mightContain(bloom, col("gid"))
     // exact arm: both sides descend from the gid-partitioned
-    // sizedGids pin, so the eval-distinct + membership join align
+    // cappedGids pin, so the eval-distinct + membership join align
     // without a fresh corpus shuffle
     val perDoc = Pin(a.filter(col("split") === "train")
       .join(evalDistinct.withColumn("in_eval", lit(1L)),

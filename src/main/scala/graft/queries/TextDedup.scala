@@ -168,10 +168,10 @@ object TextDedup {
   /** The pinned gram index `(doc_id, gid, n)`: the df-capped distinct
     * grams ([[gramIndex]] less its [[hubGrams]]), each row carrying its
     * doc's post-cap gram count n (the size annotation of PPJoin, Xiao
-    * et al. 2008). ONE pin for every gram-grain reader: the pair joins
-    * of d02, d09, d15 and d16, and s06, s16 and s19 through a
-    * projection — one definition → identical plans → one cache entry,
-    * so a session that ran d02 serves s06 from cache.
+    * et al. 2008). ONE pin for every reader of the size: the pair
+    * joins of d02, d09, d15 and d16, and s06 and s16 — one definition
+    * → identical plans → one cache entry, so a session that ran d02
+    * serves s06 from cache. (s19 reads no size: [[cappedGids]].)
     *
     * The hub grams are flagged by a broadcast left join and dropped
     * after the size window, not anti-joined: Catalyst pushes an
@@ -183,7 +183,7 @@ object TextDedup {
     *
     * Re-partitioning by gid before the pin is the load-bearing part:
     * every reader joins on gid (the pair self-join, s06's eval⋈train
-    * join, s19's membership join), and the cached blocks carry
+    * join), and the cached blocks carry
     * `HashPartitioning(gid)` through the cache, so those joins run
     * exchange-free — the 100 TB co-location strategy (partition the
     * inverted index by its join key ONCE, reuse it across every dedup
@@ -199,6 +199,24 @@ object TextDedup {
       .filter(col("hub").isNull)
       .select("doc_id", "gid", "n")
       .repartition(par, col("gid")))
+  }
+
+  /** s19's gram index `(doc_id, gid)`, pinned: the same df-capped
+    * distinct grams as [[sizedGids]], partitioned by gid, without the
+    * size annotation. s19 reads no per-doc size, so reading the shared
+    * index would make a cold s19 pay the size window's doc_id exchange
+    * for a column it drops; this fill pays ONE index-grain exchange,
+    * the gid repartition. The hub list's df agg runs on that
+    * partitioning (exchange-free, reading the same exchange), and the
+    * broadcast flag join keeps it, so s19's eval-distinct and
+    * membership join align without a fresh shuffle. Both of s19's
+    * pins read it, so the shingle pass runs once per query. */
+  private[queries] def cappedGids(s: SparkSession, dir: String): DataFrame = {
+    val par = Par.forInput(s, dir, "documents")
+    val g = gids(s, dir, distinct = true).repartition(par, col("gid"))
+    Pin(g.join(broadcast(hubGrams(g)), Seq("gid"), "left")
+      .filter(col("hub").isNull)
+      .select("doc_id", "gid"))
   }
 
   /** The one pair-intersection aggregate: per candidate pair

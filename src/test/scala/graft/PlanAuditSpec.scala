@@ -462,24 +462,24 @@ class PlanAuditSpec extends SparkTestBase {
       //       the ABSENCE of a |queries|-partition corpus sort —
       //       that is what the shard level exists to prevent
       "v19_hard_negatives" -> 3,
-      //  s19: reads a projection of the shared gram-index pin (a
-      //       cache hit at run time after d02/s06; the walk descends
-      //       its fill: 2 exchanges); s19's OWN exchanges are the
-      //       per-train-doc agg (probe + exact arms in ONE grouping)
-      //       and the 1-row fp-bound combine that the r11
+      //  s19: reads its own capped-gram pin (cappedGids), whose fill
+      //       pays ONE exchange, the gid repartition (the hub list
+      //       reads the same exchange; AQE drops the hub branch when
+      //       the list is empty, as at this SF); s19's OWN exchanges
+      //       are the per-train-doc agg (probe + exact arms in ONE
+      //       grouping) and the 1-row fp-bound combine that the r11
       //       bounded-error oracle row added (VERDICT r10 ask #6) —
-      //       the eval-gram distinct and the exact-arm membership
-      //       join align on the index's gid partitioning,
-      //       exchange-free. The Bloom build + sizing count pay in
-      //       driver jobs (v08's codebook pattern); the production
-      //       screen (DecontamGate.screen) remains the zero-join
-      //       broadcast-sketch probe. 3 -> 4 when s19 moved from the
-      //       pre-cap index pin (one gid repartition) to the
-      //       size-annotated index every gram reader shares (its
-      //       doc_id exchange is the +1). A 5th exchange here means
-      //       the audit join stopped aligning and the corpus is being
-      //       shuffled
-      "s19_bloom_decontaminate" -> 4,
+      //       the eval-gram distinct and the exact-arm membership join
+      //       align on the pin's gid partitioning, exchange-free. The
+      //       Bloom build + sizing count pay in driver jobs (v08's
+      //       codebook pattern); the production screen
+      //       (DecontamGate.screen) remains the zero-join
+      //       broadcast-sketch probe. Reading the size-annotated
+      //       sizedGids instead would add its size window's doc_id
+      //       exchange (4) for a column s19 drops. A 4th exchange here
+      //       means the audit join stopped aligning and the corpus is
+      //       being shuffled
+      "s19_bloom_decontaminate" -> 3,
       //  t16: t08's own audited tail in the returned plan (vocab agg
       //       + per-source rank window); the per-source sketch agg
       //       pays in the |sources|-bounded driver-collect job, and

@@ -8,7 +8,7 @@ import graft.SparkTestBase
   * sketch-tier contract (every rows-only sketch query is asserted
   * against an oracle-checked exact twin at every SF — the e14↔e21 /
   * e22↔e06 pattern): s19's Bloom decontamination vs the exact join
-  * twin on the same [[TextDedup.sizedGids]] relation, and t16's
+  * twin on the same [[TextDedup.cappedGids]] relation, and t16's
   * count-min estimates vs t08's materialized exact counts. In
   * package graft.queries to reach the private[queries] internals the
   * twins are built from. */
@@ -40,8 +40,8 @@ class SketchAnchorSpec extends SparkTestBase {
       // exact twin: the same split of the same capped-gram relation,
       // train grams LEFT-joined against the distinct eval gram set
       val a = graft.operators.Sampling.assignSplits(
-        TextDedup.sizedGids(spark, dir).select("doc_id", "gid"),
-        col("doc_id"), Seq("train" -> 80, "eval" -> 100))
+        TextDedup.cappedGids(spark, dir), col("doc_id"),
+        Seq("train" -> 80, "eval" -> 100))
       val evalG = a.filter(col("split") === "eval")
         .select(col("gid").as("egid")).distinct()
       val exact = a.filter(col("split") === "train")
@@ -97,8 +97,7 @@ class SketchAnchorSpec extends SparkTestBase {
     val dir = "/root/testdata/sf0.001"
     // the gate's filter is the SAME build s19 runs: capped eval grams
     val a = graft.operators.Sampling.assignSplits(
-      TextDedup.sizedGids(spark, dir).select("doc_id", "gid"),
-      org.apache.spark.sql.functions
+      TextDedup.cappedGids(spark, dir), org.apache.spark.sql.functions
         .col("doc_id"), Seq("train" -> 80, "eval" -> 100))
     val bloom = graft.streaming.DecontamGate.buildFilter(
       a.filter(col("split") === "eval").select("gid"))
